@@ -5,7 +5,9 @@ Two layers:
   - partition_stats(df): a one-pass DataFrame aggregate keyed by
     spark_partition_id → rows / bytes / ts range per physical partition
     (the lineage record of what each task actually processed);
-  - StageTimer: driver-side wall-clock per pipeline stage → docs/sec.
+  - StageTimer: driver-side wall-clock per pipeline stage → docs/sec;
+  - JobGroup: the Spark job ids each pipeline stage ran, from the job
+    group the stage's jobs are tagged with.
 
 Metrics are committed as snapshot metadata on the destination table plus a
 JSON sidecar under <warehouse>/<table>/_metrics/ so they survive and are
@@ -53,6 +55,58 @@ class StageTimer:
 
     def total(self) -> float:
         return time.perf_counter() - self._t0
+
+
+class JobGroup:
+    """Tags every Spark job the calling thread starts with one job group
+    (`setJobGroup`) and the current stage as its description, and records
+    the job ids of each stage from `statusTracker().getJobIdsForGroup`.
+    Job group and description are thread-local properties; the caller's
+    values are restored on exit."""
+
+    _PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    def __init__(self, sc, group_id: str, first_stage: str):
+        self.sc = sc
+        self.group_id = group_id
+        self.stage = first_stage
+        self.stage_jobs: dict[str, list[int]] = {}
+
+    def _job_ids(self) -> set[int]:
+        # The id array comes back as ONE string: iterating the Java array
+        # from Python costs a driver round trip per element, and a group
+        # id that recurs (see __enter__) keeps every earlier job, so that
+        # cost would grow with each use of the id.
+        ids = self._tracker.getJobIdsForGroup(self.group_id)
+        return {int(x) for x in self._arrays.toString(ids).strip("[]").split(",") if x}
+
+    def __enter__(self) -> "JobGroup":
+        self._saved = {k: self.sc.getLocalProperty(k) for k in self._PROPS}
+        self._tracker = self.sc._jsc.statusTracker()
+        self._arrays = self.sc._jvm.java.util.Arrays
+        # a group id can recur (a poll of an exhausted source retries its
+        # batch id): jobs an earlier use ran are not this call's
+        self._seen = self._job_ids()
+        self._n0 = len(self._seen)
+        self.sc.setJobGroup(self.group_id, self.stage)
+        return self
+
+    def next_stage(self, stage: str | None) -> None:
+        """Close the current stage (record the jobs it ran) and label the
+        jobs that follow with `stage`."""
+        ids = self._job_ids()
+        self.stage_jobs[self.stage] = sorted(ids - self._seen)
+        self._seen |= ids
+        if stage is not None:
+            self.stage = stage
+            self.sc.setJobDescription(stage)
+
+    def n_jobs(self) -> int:
+        return len(self._seen) - self._n0
+
+    def __exit__(self, *exc) -> None:
+        for k, v in self._saved.items():
+            self.sc.setLocalProperty(k, v)
 
 
 def write_metrics_sidecar(table_path: str, batch_id: str, payload: dict) -> str:

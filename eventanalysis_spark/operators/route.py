@@ -8,30 +8,62 @@ Parity targets:
   - the event-job registry (JobRegistry.cs:52-68) becomes the rules table's
     sink column: one parse pass fans out to N sinks.
 
-Spark-first: the rule table is tiny → broadcast left join, so routing adds
-zero shuffles; the router returns ONE DataFrame with (sink, allowed)
-columns and `fan_out` performs N filtered writes off a single cached pass.
+Spark-first: the rule table is tiny → a literal map lookup, so routing adds
+no join, no shuffle and no broadcast; the router returns ONE DataFrame
+with (sink, allowed) columns and `fan_out` performs N filtered writes off
+a single cached pass.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SINK = "misc"
 
 
-def apply_rules(
+def rule_lookup(rules: DataFrame, class_col: str = "event_class") -> Column:
+    """Each row's rule as a struct (min_version, enabled, sink), null when
+    its class has no rule.
+
+    The rule table (one row per event class, a few dozen at most) is
+    collected here and becomes a literal map keyed by class: the lookup
+    is a plain expression, no join and no broadcast job. Collecting a
+    driver-built local relation runs no Spark job either. A null class
+    never matches (left-join semantics); two rules for one class fail as
+    a duplicate map key instead of duplicating the class's rows.
+
+    Building the map takes a few driver round trips per rule, so a caller
+    that routes many frames with the same rules builds it once and
+    passes it to `route_by`."""
+    fields = {f.name: f.dataType for f in rules.schema.fields}
+    value_type = StructType([
+        StructField(c, fields[c]) for c in ("min_version", "enabled", "sink")
+    ])
+    entries = []
+    for r in rules.select(class_col, *value_type.names).collect():
+        if r[0] is not None:
+            entries += [
+                F.lit(r[0]),
+                F.struct(*[F.lit(r[f.name]).cast(f.dataType).alias(f.name)
+                           for f in value_type.fields]),
+            ]
+    if not entries:
+        return F.lit(None).cast(value_type)
+    return F.try_element_at(F.create_map(*entries), F.col(class_col))
+
+
+def route_by(
     enriched: DataFrame,
-    rules: DataFrame,
+    rule: Column,
     default_sink: str = DEFAULT_SINK,
-    class_col: str = "event_class",
     version_col: str = "ever",
 ) -> DataFrame:
-    """Broadcast-join the rule table and compute routing columns:
+    """Routing columns from a `rule_lookup` column:
 
       allowed     : enabled && version >= min_version, default-allow when
                     the class has no rule (EventInfoTracker.cs:50-54)
@@ -41,31 +73,32 @@ def apply_rules(
                     quarantined data is triageable without re-deriving
                     which rule fired
 
-    No rows are dropped here — observation happens on the full frame."""
-    r = rules.select(
-        F.col(class_col).alias("__rule_class"),
-        F.col("min_version").alias("__rule_minver"),
-        F.col("enabled").alias("__rule_enabled"),
-        F.col("sink").alias("__rule_sink"),
-    )
-    j = enriched.join(
-        F.broadcast(r), enriched[class_col] == r["__rule_class"], "left"
-    )
-    enabled = F.coalesce(F.col("__rule_enabled"), F.lit(True))
+    All three are added in one projection. No rows are dropped here —
+    observation happens on the full frame."""
+    enabled = F.coalesce(rule["enabled"], F.lit(True))
     ver_ok = F.coalesce(F.col(version_col), F.lit(0)) >= F.coalesce(
-        F.col("__rule_minver"), F.lit(0)
+        rule["min_version"], F.lit(0)
     )
-    return (
-        j.withColumn("allowed", enabled & ver_ok)
-        .withColumn(
-            "drop_reason",
-            F.when(F.col("allowed"), F.lit(None).cast("string"))
-            .when(~enabled, F.lit("disabled"))
-            .otherwise(F.lit("min_version")),
-        )
-        .withColumn("sink", F.coalesce(F.col("__rule_sink"), F.lit(default_sink)))
-        .drop("__rule_class", "__rule_minver", "__rule_enabled", "__rule_sink")
-    )
+    allowed = enabled & ver_ok
+    return enriched.withColumns({
+        "allowed": allowed,
+        "drop_reason": F.when(allowed, F.lit(None).cast("string"))
+        .when(~enabled, F.lit("disabled"))
+        .otherwise(F.lit("min_version")),
+        "sink": F.coalesce(rule["sink"], F.lit(default_sink)),
+    })
+
+
+def apply_rules(
+    enriched: DataFrame,
+    rules: DataFrame,
+    default_sink: str = DEFAULT_SINK,
+    class_col: str = "event_class",
+    version_col: str = "ever",
+) -> DataFrame:
+    """Look up each row's rule in `rules` and compute the routing columns
+    (`rule_lookup` + `route_by`)."""
+    return route_by(enriched, rule_lookup(rules, class_col), default_sink, version_col)
 
 
 def routed_only(with_rules: DataFrame) -> DataFrame:

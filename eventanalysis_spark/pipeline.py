@@ -8,11 +8,13 @@ reference's ingest lifecycle (SURVEY.md §3.1):
   MaxRecordId() watermark                 (warc_ts, url) watermark in table state
   XPath rid>N pushdown into ETW           Catalyst filter → parquet min-max pruning
   per-row XML parse + dim caches          ONE Arrow pandas-UDF parse pass +
-                                          broadcast-join enrich
+                                          broadcast-join enrich (driver-held
+                                          dims and rules as local relations)
   ProviderInfoCache.Observe (new dims)    distinct → anti-join → deterministic ids,
                                           committed before facts
-  ShouldProcess rule filter               broadcast rule join (default-allow),
-                                          dropped rows still observed
+  ShouldProcess rule filter               rule-map lookup built once per pipeline
+                                          (default-allow), dropped rows still
+                                          observed
   buffered insert + txn commit            per-sink snapshot append (atomic manifest)
   tag files (db-updated, last rid)        commit metadata + _metrics sidecars
   -cap 20000 / -repeat loop               bounded batches / run_until_exhausted
@@ -20,11 +22,18 @@ reference's ingest lifecycle (SURVEY.md §3.1):
 Scale design (100 TB / 1000 executors):
   - ONE wide pass over the batch: parse runs once and streams directly
     into a single partitionBy(sink) columnar write (dropped rows →
-    quarantine partition); every downstream stat re-reads the narrow
-    columns of that staged data instead of re-running the UDF or caching
-    the wide frame;
-  - all joins in the batch are broadcast (dims and rules are KBs—MBs);
-    the fact side never shuffles for enrichment;
+    quarantine partition); every downstream stat comes from ONE narrow
+    aggregate scan of that staged data instead of re-running the UDF or
+    caching the wide frame. While dims fit the driver cache and lineage
+    fits the manifest, that aggregate is one Arrow collect and lineage,
+    observations, dim discovery, hot hosts and the per-sink aggregate
+    are pyarrow roll-ups committed from the driver (no Spark job);
+    past either ceiling the same roll-ups stay distributed;
+  - a capped batch is a bound job, the write job and the stats collect;
+    a call that finds the source exhausted runs only the bound job;
+  - the enrich joins are broadcast (dims are KBs—MBs, held on the driver
+    as local relations, so no Python worker serves them) and routing is a
+    literal map lookup; the fact side never shuffles for either;
   - the batch is repartitioned by xxhash64(url) — uniform by construction
     (the north rule's hashed-url partitioning); host-keyed aggregates use
     explicit hot-host salting (operators/skew.py) on top of map-side
@@ -36,28 +45,32 @@ Scale design (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from eventanalysis_spark import datagen
 from eventanalysis_spark.functions.scalars import period_key
-from eventanalysis_spark.metrics import StageTimer, write_metrics_sidecar
-from eventanalysis_spark.operators.enrich import discover_and_grow, enrich_pages
+from eventanalysis_spark.metrics import JobGroup, StageTimer, write_metrics_sidecar
+from eventanalysis_spark.operators.enrich import enrich_pages
 from eventanalysis_spark.operators.parse import parse_pages, parse_pages_fused
-from eventanalysis_spark.operators.route import apply_rules
+from eventanalysis_spark.operators.route import route_by, rule_lookup
 from eventanalysis_spark.sources.catalog import Warehouse
-from eventanalysis_spark.sources.incremental import Watermark, advance, next_batch
+from eventanalysis_spark.sources.incremental import (
+    Watermark,
+    advance,
+    max_key,
+    next_batch,
+)
 
 SINK_PREFIX = "sink_"
 QUARANTINE = "__quarantine"
@@ -74,8 +87,8 @@ RESERVED_TABLES = frozenset(
 # sink names follow the reference's job-name grammar (EventJobConfig.cs:58)
 _SINK_NAME_RE = re.compile(r"^[a-z][a-z0-9]*([-_][a-z0-9]+)*$")
 
-# fixed schemas for driver-side micro-commits (Table.append_rows — no
-# Spark job for a 5-row table); must match the bootstrap DataFrames
+# fixed schemas of the driver-cached dims (local relations and
+# Table.append_rows growth commits); must match the bootstrap DataFrames
 _HOST_SCHEMA = StructType([
     StructField("host_id", IntegerType()),
     StructField("host", StringType()),
@@ -85,13 +98,64 @@ _LANG_SCHEMA = StructType([
     StructField("lang", StringType()),
     StructField("lang_name", StringType()),
 ])
-_OBS_SCHEMA = StructType([
-    StructField("event_class", StringType()),
-    StructField("n_observed", LongType()),
-    StructField("n_routed", LongType()),
-    StructField("n_dropped", LongType()),
-    StructField("batch_id", StringType()),
-])
+
+# the batch stats grain; `bucket` (the period key) completes it
+_FINE_KEYS = ("sink", "part_id", "event_class", "host", "lang")
+# grain of the per-batch sink_agg rows
+_AGG_KEYS = ["sink", "host", "lang", "event_class", "bucket"]
+
+
+def _row_stats() -> list[Column]:
+    """Per-group stats of staged rows. The timestamps become Spark's
+    (session-UTC) string form here: zero-padded 'yyyy-MM-dd HH:mm:ss[.f]'
+    strings of years 1-9999 order like the timestamps, so roll-ups take
+    plain string min/max and lineage keeps Spark's own strings."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.min("warc_ts").cast("string").alias("ts_min"),
+        F.max("warc_ts").cast("string").alias("ts_max"),
+        F.sum("n_bytes").alias("bytes"),
+    ]
+
+
+def _rollup_stats() -> list[Column]:
+    """_row_stats rolled up to a coarser grain, in Spark."""
+    return [
+        F.sum("n").alias("n"),
+        F.min("ts_min").alias("ts_min"),
+        F.max("ts_max").alias("ts_max"),
+        F.sum("bytes").alias("bytes"),
+    ]
+
+
+_SUM0 = pc.ScalarAggregateOptions(min_count=0)  # all-null sum → 0, not null
+
+
+def _rollup(
+    t: pa.Table,
+    keys: list[str],
+    aggs: list[tuple[str, str]] = (
+        ("n", "sum"), ("ts_min", "min"), ("ts_max", "max"), ("bytes", "sum"),
+    ),
+) -> pa.Table:
+    """_rollup_stats on the driver: a pyarrow group-by whose output columns
+    keep their input names (keys first)."""
+    out = t.group_by(keys).aggregate(
+        [(c, f, _SUM0) if f == "sum" else (c, f) for c, f in aggs]
+    )
+    cols = [c for c, _ in aggs]
+    return out.select(keys + [f"{c}_{f}" for c, f in aggs]).rename_columns(keys + cols)
+
+
+def _arrow_rows(rows: list[dict], schema: StructType) -> pa.Table:
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+
+
+def _local_df(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Driver-held rows as a local relation (LocalTableScan). Built from
+    Arrow, not from Python tuples, so it is no Python RDD: broadcasting it
+    needs no Python worker."""
+    return spark.createDataFrame(_arrow_rows(rows, schema), schema)
 
 
 def validate_sink_name(sink: str) -> None:
@@ -132,32 +196,28 @@ class PipelineConfig:
     # so cold data is recompressed to zstd by Table.compact (the Iceberg
     # rewrite_data_files / reference-vacuum maintenance step, S12).
     staging_codec: str = "snappy"
-    # Files per sink_agg commit. The per-batch aggregate is bounded by
-    # group cardinality (hosts x langs x classes x buckets actually seen),
-    # ~10^3-10^4 rows at bench scale -> 1 file. On a cluster where a batch
-    # can surface millions of hosts, raise to ~rows/5M so single-task
-    # writes don't serialize. (Explicit because the persisted agg pins its
-    # shuffle partitioning before AQE coalescing can apply.)
-    agg_write_files: int = 1
     # Driver dim-cache ceiling. Below it, host/lang dims live on the
-    # driver (the reference's ProviderInfoCache shape: tiny dims, broadcast
-    # enrich, driver-side sequential ids). Once the host dim outgrows it,
+    # driver (the reference's ProviderInfoCache shape: tiny dims enriched
+    # as broadcast local relations, driver-side sequential ids, and the
+    # batch stats rolled up on the driver). Once the host dim outgrows it,
     # the pipeline PERMANENTLY switches to the table path (flag persisted
     # in state): hosts stay in the warehouse table, discovery is a
-    # distributed anti-join append (operators/enrich.py), and the enrich
-    # join stops forcing broadcast so AQE picks the join strategy. At
-    # web scale hosts exceed 10^7 — a driver cache cannot hold them.
+    # distributed anti-join append (operators/enrich.py), the batch stats
+    # stay distributed, and the enrich join stops forcing broadcast so AQE
+    # picks the join strategy. At web scale hosts exceed 10^7 — a driver
+    # cache cannot hold them.
     dim_cache_limit: int = 1_000_000
-    # Per-partition lineage transport. Inline (driver collect at
-    # (sink, part_id, event_class) grain, embedded in the sink manifest
-    # JSON) is exact reference-tag-file parity and free at <=10^3 write
-    # tasks. But at cluster scale a batch can stage 10^5+ tasks x 10
-    # sinks — millions of driver rows and an unboundedly growing manifest
-    # — so above this many staged data files the per-partition lineage is
-    # instead written DISTRIBUTEDLY to the 'lineage' warehouse table
-    # (one bounded rollup of the cached fine-grain aggregate; the driver
-    # only ever holds the (sink, event_class) observation grain) and each
-    # sink commit carries a {"lineage_ref": ...} pointer.
+    # Per-partition lineage transport. Inline (rolled up on the driver from
+    # the collected stats grain, embedded in the sink manifest JSON) is
+    # exact reference-tag-file parity and free at <=10^3 write tasks. But
+    # at cluster scale a batch can stage 10^5+ tasks x 10 sinks — millions
+    # of driver rows and an unboundedly growing manifest — so above this
+    # many staged data files the batch stats stay distributed: the
+    # per-partition lineage is written DISTRIBUTEDLY to the 'lineage'
+    # warehouse table (one bounded rollup of the cached fine-grain
+    # aggregate; the driver only ever holds the (sink, event_class)
+    # observation grain) and each sink commit carries a
+    # {"lineage_ref": ...} pointer.
     lineage_inline_max: int = 4096
     discovery: str = "post"  # "post": new dim keys from the staged batch
     # aggregate (no extra source scan; ids attach from the NEXT batch on) |
@@ -215,7 +275,6 @@ class Pipeline:
             else [r.asDict() for r in self.host_tbl.read(spark).collect()]
         )
         self._lang_rows = [r.asDict() for r in self.lang_tbl.read(spark).collect()]
-        self._rules_df = self.rules_tbl.read(spark)
         # hot hosts learned from the previous batch's aggregate (committed
         # with the watermark, so resume keeps the salting decision)
         self._hot_hosts: list[str] = list(self.state_tbl.state().get("hot_hosts", []))
@@ -225,11 +284,11 @@ class Pipeline:
         # duplicate would silently DUPLICATE every fact row of that class
         # (the JobRegistry.cs:52-68 duplicate-channel rejection, which
         # exists for exactly this reason)
-        rule_rows = self._rules_df.collect()
+        rules_df = self.rules_tbl.read(spark)
+        rule_rows = rules_df.collect()
         for s in {r["sink"] for r in rule_rows} | {config.default_sink}:
             validate_sink_name(s)
         seen_cls: dict[str, tuple] = {}
-        dup_exact = False
         for r in rule_rows:
             key = (r["sink"], r["min_version"], r["enabled"])
             prev = seen_cls.get(r["event_class"])
@@ -240,26 +299,22 @@ class Pipeline:
                     "for one event class would duplicate its rows through "
                     "the routing join"
                 )
-            dup_exact = dup_exact or prev is not None
             seen_cls[r["event_class"]] = key
-        if dup_exact:
-            # exact re-registration replaces (JobRegistry.Register dict
-            # semantics): dedupe so the routing join stays 1:1
-            self._rules_df = self._rules_df.dropDuplicates(["event_class"])
+        # the rules as a local relation built once from the validated rows;
+        # exact re-registration replaces (JobRegistry.Register dict
+        # semantics): one row per event class keeps routing 1:1
+        unique = {r["event_class"]: r.asDict() for r in rule_rows}
+        self._rules_df = _local_df(spark, list(unique.values()), rules_df.schema)
+        # the per-row rule lookup, built once: every batch routes with it
+        self._rule = rule_lookup(self._rules_df)
 
     def _host_df(self) -> DataFrame:
         if self._dims_spilled:
             return self.host_tbl.read(self.spark)
-        return self.spark.createDataFrame(
-            [(r["host_id"], r["host"], r["registrar"]) for r in self._host_rows],
-            "host_id int, host string, registrar string",
-        )
+        return _local_df(self.spark, self._host_rows, _HOST_SCHEMA)
 
     def _lang_df(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(r["lang"], r["lang_name"]) for r in self._lang_rows],
-            "lang string, lang_name string",
-        )
+        return _local_df(self.spark, self._lang_rows, _LANG_SCHEMA)
 
     def _grow_dims(self, seen_hosts: set, seen_langs: set, batch_id: str) -> tuple[int, int]:
         """Deterministic sequential id assignment for newly observed keys
@@ -277,12 +332,15 @@ class Pipeline:
         )
         if new_hosts and self.host_tbl.state().get("last_batch") != batch_id:
             next_id = max((r["host_id"] for r in self._host_rows), default=0) + 1
-            rows = [(next_id + i, h, None) for i, h in enumerate(new_hosts)]
-            for hid, h, _ in rows:
-                self._host_rows.append({"host_id": hid, "host": h, "registrar": None})
+            rows = [
+                {"host_id": next_id + i, "host": h, "registrar": None}
+                for i, h in enumerate(new_hosts)
+            ]
+            self._host_rows.extend(rows)
             n_h = len(new_hosts)
             self.host_tbl.append_rows(
-                rows, _HOST_SCHEMA, meta={"batch": batch_id},
+                _arrow_rows(rows, _HOST_SCHEMA),
+                meta={"batch": batch_id},
                 state_update={"last_batch": batch_id},
             )
             if len(self._host_rows) > self.cfg.dim_cache_limit:
@@ -292,12 +350,12 @@ class Pipeline:
                 self._host_rows = None
         new_langs = sorted(seen_langs - {r["lang"] for r in self._lang_rows})
         if new_langs and self.lang_tbl.state().get("last_batch") != batch_id:
-            rows = [(lg, None) for lg in new_langs]
-            for lg in new_langs:
-                self._lang_rows.append({"lang": lg, "lang_name": None})
+            rows = [{"lang": lg, "lang_name": None} for lg in new_langs]
+            self._lang_rows.extend(rows)
             n_l = len(new_langs)
             self.lang_tbl.append_rows(
-                rows, _LANG_SCHEMA, meta={"batch": batch_id},
+                _arrow_rows(rows, _LANG_SCHEMA),
+                meta={"batch": batch_id},
                 state_update={"last_batch": batch_id},
             )
         return n_h, n_l
@@ -345,6 +403,28 @@ class Pipeline:
         return f"b{n + 1:06d}"
 
     # ---- one batch -------------------------------------------------------
+    def _staged(self, batch: DataFrame) -> DataFrame:
+        """The wide pass up to the write: parse (+fused text features) →
+        enrich → route, with the target sink (QUARANTINE for dropped rows)
+        and the write task's partition id. Features ride the same Arrow
+        batch as the parse — measured 4.3s/1.6M docs cheaper than
+        equivalent JVM expressions appended after the UDF (each is another
+        full pass over the text column)."""
+        parsed = (
+            parse_pages_fused(batch, features=self.cfg.compute_text_features)
+            if self.cfg.fused_parse
+            else parse_pages(batch, features=self.cfg.compute_text_features)
+        )
+        enriched = enrich_pages(
+            parsed, self._host_df(), self._lang_df(),
+            broadcast_host=not self._dims_spilled,
+        )
+        with_rules = route_by(enriched, self._rule, self.cfg.default_sink)
+        return with_rules.withColumns({
+            "sink": F.when(F.col("allowed"), F.col("sink")).otherwise(F.lit(QUARANTINE)),
+            "part_id": F.spark_partition_id(),
+        }).drop("allowed")
+
     def run_batch(self, source: DataFrame) -> BatchResult | None:
         """Process one capped batch above the watermark. Returns None when
         the source is exhausted (the reference's increment==0 signal).
@@ -352,14 +432,39 @@ class Pipeline:
         Single-wide-pass design: the expensive parse UDF runs EXACTLY ONCE,
         streamed straight into one partitionBy(sink) parquet write (dropped
         rows land in a quarantine partition). Every downstream number —
-        counts, watermark bounds, observation stats, per-sink aggregates,
-        per-partition lineage — is computed from the written columnar
-        staging data (narrow column scans, no UDF re-run, no wide cache)."""
-        import os as _os
+        counts, observation stats, per-sink aggregates, per-partition
+        lineage, dim discovery — is rolled up from ONE narrow aggregate
+        scan of the written staging data (no UDF re-run, no wide cache).
 
+        Every Spark job of the call runs under the job group
+        `pagelog-<batch_id>` with its stage as the job description; the
+        per-stage job ids go to the `_metrics/batch-<batch_id>.json`
+        sidecar (also written, marked exhausted, when nothing was left)."""
+        batch_id = self._next_batch_id()
+        with JobGroup(
+            self.spark.sparkContext, f"pagelog-{batch_id}", "discover_dims"
+        ) as jobs:
+            return self._run_batch(source, batch_id, jobs)
+
+    def _run_batch(
+        self, source: DataFrame, batch_id: str, jobs: JobGroup
+    ) -> BatchResult | None:
         timer = StageTimer()
         wm = self.watermark()
-        batch_id = self._next_batch_id()
+
+        def lap(next_stage: str | None = None) -> None:
+            timer.lap(jobs.stage)
+            jobs.next_stage(next_stage)
+
+        def exhausted() -> None:
+            lap()
+            write_metrics_sidecar(
+                self.state_tbl.path, batch_id,
+                {"batch_id": batch_id, "exhausted": True, "n_input": 0,
+                 "stage_seconds": dict(timer.stages),
+                 "stage_jobs": jobs.stage_jobs, "spark_jobs": jobs.n_jobs(),
+                 "committed_at": time.time()},
+            )
 
         # validity filter BEFORE the capped ordered selection: null-keyed rows
         # sort first under ASC NULLS FIRST and would wedge the watermark loop
@@ -367,6 +472,9 @@ class Pipeline:
             F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
         )
         batch = next_batch(valid_source, wm, self.cfg.cap)
+        if batch is None:  # capped bound found nothing above the watermark
+            exhausted()
+            return None
         if self.cfg.repartition:
             # Explicit batch partitioning (the north rule's hashed-url +
             # hot-host salting). Host-keyed partitioning co-locates each
@@ -416,77 +524,41 @@ class Pipeline:
                     {p["lang"] for p in pairs if p["lang"]},
                     batch_id,
                 )
-        timer.lap("discover_dims")
+        lap("parse_route_write")
 
-        # -- THE wide pass: parse (+fused text features) → enrich → route →
-        # partitioned write. Features ride the same Arrow batch as the
-        # parse — measured 4.3s/1.6M docs cheaper than equivalent JVM
-        # expressions appended after the UDF (each is another full pass
-        # over the text column).
-        parsed = (
-            parse_pages_fused(batch, features=self.cfg.compute_text_features)
-            if self.cfg.fused_parse
-            else parse_pages(batch, features=self.cfg.compute_text_features)
-        )
-        enriched = enrich_pages(
-            parsed, self._host_df(), self._lang_df(),
-            broadcast_host=not self._dims_spilled,
-        )
-        with_rules = apply_rules(enriched, self._rules_df, self.cfg.default_sink)
-        staged = with_rules.withColumn(
-            "sink", F.when(F.col("allowed"), F.col("sink")).otherwise(F.lit(QUARANTINE))
-        ).withColumn("part_id", F.spark_partition_id())
-        stage_dir = _os.path.join(self.wh.root, "_staging", batch_id)
+        # -- THE wide pass: parse → enrich → route → partitioned write
+        staged = self._staged(batch)
+        stage_dir = os.path.join(self.wh.root, "_staging", batch_id)
         wm_bound_row = None
-        if not _os.path.exists(_os.path.join(stage_dir, "_SUCCESS")):
+        if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
             # the watermark bound max(ts,url) rides the write job as an
-            # Observation — zero extra scan, and the fine-stats job below
+            # Observation — zero extra scan, and the stats scan below
             # then never touches the wide url column
             wm_obs = Observation(f"wm-{batch_id}")
-            (staged.drop("allowed")
-             .observe(wm_obs, F.max(F.struct(F.col("warc_ts"), F.col("url"))).alias("mx"))
+            (staged.observe(wm_obs, max_key().alias("mx"))
              .write.mode("overwrite")
              .option("compression", self.cfg.staging_codec)
              .partitionBy("sink").parquet(stage_dir))
             wm_bound_row = wm_obs.get["mx"]
-        timer.lap("parse_route_write")
+        lap("observe")
 
-        # exhausted source → the partitioned write produced no sink dirs
-        if not any(
-            d.startswith("sink=") for d in _os.listdir(stage_dir)
-        ):
-            import shutil as _shutil
-
-            _shutil.rmtree(stage_dir, ignore_errors=True)
+        # exhausted uncapped source → the partitioned write produced no sink dirs
+        if not any(d.startswith("sink=") for d in os.listdir(stage_dir)):
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            exhausted()
             return None
 
-        # -- all stats from ONE staged scan: a single fine-grained
-        # map-side-partial hash aggregate at (sink, part_id, event_class,
-        # host, lang, bucket) grain is persisted, and EVERYTHING downstream
-        # — per-sink north-rule aggregate, lineage, observation stats,
-        # dim-discovery keys, hot-host volumes — is a tiny rollup of that
-        # cache. The previous design ran TWO full staged scans (fine stats
-        # + agg) in parallel threads; overlap hides the second scan only
-        # when cores are idle, so at low parallelism (the N→4N scaling
-        # regime) it was pure extra work. part_id is in the grain, so the
-        # map-side combine is perfect (each task owns one part_id) and the
-        # shuffled volume is the per-task distinct-combo count, not rows.
-        import threading as _threading
-
-        stg = self.spark.read.parquet(stage_dir)
-        fine_grain = (
-            stg.groupBy(
-                "sink", "part_id", "event_class", "host", "lang",
-                period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("warc_ts").alias("__ts_min"),
-                F.max("warc_ts").alias("__ts_max"),
-                F.sum("n_bytes").alias("__bytes"),
-            )
-            .persist()
-        )
+        # -- all stats from ONE staged scan: a map-side-partial hash
+        # aggregate at (sink, part_id, event_class, host, lang, bucket)
+        # grain. part_id is in the grain, so the map-side combine is
+        # perfect (each write task owns one part_id) and the shuffled
+        # volume is the per-task distinct-combo count, not rows. The staged
+        # dir is read with the wide pass's own schema (no inference job).
+        stg = self.spark.read.schema(staged.schema).parquet(stage_dir)
+        fine_grain = stg.groupBy(
+            *_FINE_KEYS,
+            period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
+        ).agg(*_row_stats())
         agg_tbl = self.wh.table("sink_agg")
         post_discovery = self.cfg.discovery == "post"
 
@@ -496,162 +568,75 @@ class Pipeline:
         # the driver must never hold per-partition rows.
         n_staged_files = sum(
             1
-            for _r, _d, _fs in _os.walk(stage_dir)
+            for _r, _d, _fs in os.walk(stage_dir)
             for f in _fs
             if f.endswith(".parquet")
         )
         spill_lineage = n_staged_files > self.cfg.lineage_inline_max
-
-        # the ONE staged scan: materializes the cache with full parallelism
-        # and collects the (sink, part_id, event_class) rollup (lineage +
-        # observation grain) — or, on the spill path, only the bounded
-        # (sink, event_class) observation grain. (A grouping-sets form was
-        # measured 3x slower at low parallelism: Expand duplicates every
-        # input row per set.)
-        _fine_keys = (
-            ["sink", "event_class"] if spill_lineage
-            else ["sink", "part_id", "event_class"]
-        )
-        fine = (
-            fine_grain.groupBy(*_fine_keys)
-            .agg(
-                F.sum("n").alias("rows"),
-                F.min("__ts_min").cast("string").alias("ts_min"),
-                F.max("__ts_max").cast("string").alias("ts_max"),
-                F.sum("__bytes").alias("bytes"),
+        if not (spill_lineage or self._dims_spilled):
+            # driver path: the fine grain (10^3-10^4 rows per batch while
+            # dims fit the driver cache and lineage fits the manifest) is
+            # ONE Arrow collect; everything below rolls up from it with
+            # pyarrow group-bys
+            fine = fine_grain.toArrow()
+            fine_grain = None
+        else:
+            # spill paths: the fine grain stays distributed (persisted);
+            # the driver collects only the lineage/observation grain
+            fine_grain = fine_grain.persist()
+            keys = (
+                ["sink", "event_class"] if spill_lineage
+                else ["sink", "part_id", "event_class"]
             )
-            .collect()
-        )
-        n_input_fine = sum(r["rows"] for r in fine)
+            fine = fine_grain.groupBy(*keys).agg(*_rollup_stats()).toArrow()
+        n_input = pc.sum(fine["n"]).as_py() or 0
+        hot_thr = self.cfg.salt_threshold * max(n_input, 1)
 
-        # -- per-sink north-rule aggregate (additive counts), INCLUDING the
-        # quarantine partition ("observe even ignored events",
-        # EventImportJob.cs:93-94): a cached rollup + tiny append, launched
-        # on a DRIVER THREAD so it overlaps the driver-side lineage/obs
-        # assembly and the sink manifest commits below.
-        agg_res: dict = {}
-        hot_thr = self.cfg.salt_threshold * max(n_input_fine, 1)
-
-        def _agg_write():
-            try:
-                if agg_tbl.state().get("last_batch") != batch_id:
-                    if post_discovery and not self._dims_spilled:
-                        # ONE tiny cached rollup feeds dim discovery AND
-                        # hot-host detection: (host, lang) volumes;
-                        # host/lang marginals derive driver-side
-                        agg_res["kl"] = (
-                            fine_grain.groupBy("host", "lang")
-                            .agg(F.sum("n").alias("n"))
-                            .collect()
-                        )
-                    elif post_discovery:
-                        # spilled dims: hosts never collect unbounded —
-                        # hot candidates are filtered to >= threshold
-                        # (≤ 1/salt_threshold rows by construction) and
-                        # langs are a bounded distinct
-                        agg_res["hot"] = (
-                            fine_grain.groupBy("host")
-                            .agg(F.sum("n").alias("n"))
-                            .where(F.col("n") >= F.lit(hot_thr))
-                            .collect()
-                        )
-                        agg_res["langs"] = (
-                            fine_grain.select("lang").distinct().collect()
-                        )
-                    agg = (
-                        fine_grain.groupBy("sink", "host", "lang", "event_class", "bucket")
-                        .agg(F.sum("n").alias("n"))
-                        .withColumn("batch_id", F.lit(batch_id))
-                    )
-                    agg_res["sid"] = agg_tbl.append(
-                        agg, meta={"batch": batch_id},
-                        state_update={"last_batch": batch_id},
-                        coalesce=self.cfg.agg_write_files,
-                    )
-                else:  # resume: locate the already-committed snapshot
-                    agg_res["sid"] = agg_tbl.snapshot_for_meta("batch", batch_id)
-            except Exception as e:
-                agg_res["err"] = e
-
-        agg_thread = _threading.Thread(target=_agg_write, name=f"agg-{batch_id}")
-        agg_thread.start()
         # resume (write skipped, no Observation): one narrow 2-column scan
         if wm_bound_row is None:
-            wm_bound_row = stg.select(
-                F.max(F.struct(F.col("warc_ts"), F.col("url"))).alias("mx")
-            ).collect()[0]["mx"]
-        obs_rows: list = list(fine)
+            wm_bound_row = stg.select(max_key().alias("mx")).collect()[0]["mx"]
+        by_sink = _rollup(fine, ["sink"], [("n", "sum")])
+        sink_rows = dict(zip(by_sink["sink"].to_pylist(), by_sink["n"].to_pylist()))
         lineage: dict[str, list] = {}
-        sink_rows: dict[str, int] = {}
         if not spill_lineage:
-            lineage_acc: dict = {}
-            for r in fine:
-                k = (r["sink"], r["part_id"])
-                d = lineage_acc.get(k)
-                if d is None:
-                    lineage_acc[k] = d = {
-                        "rows": 0, "ts_min": r["ts_min"], "ts_max": r["ts_max"],
-                        "bytes": 0,
-                    }
-                d["rows"] += r["rows"]
-                d["bytes"] += r["bytes"] or 0
-                if r["ts_min"] < d["ts_min"]:
-                    d["ts_min"] = r["ts_min"]
-                if r["ts_max"] > d["ts_max"]:
-                    d["ts_max"] = r["ts_max"]
-            for k, d in lineage_acc.items():
-                lineage.setdefault(k[0], []).append(
-                    {"partition": k[1], "rows": d["rows"],
-                     "ts_min": d["ts_min"], "ts_max": d["ts_max"],
-                     "bytes": d["bytes"]}
+            parts = _rollup(fine, ["sink", "part_id"]).sort_by(
+                [("sink", "ascending"), ("part_id", "ascending")]
+            )
+            for r in parts.to_pylist():
+                lineage.setdefault(r["sink"], []).append(
+                    {"partition": r["part_id"], "rows": r["n"],
+                     "ts_min": r["ts_min"], "ts_max": r["ts_max"],
+                     "bytes": r["bytes"]}
                 )
-                sink_rows[k[0]] = sink_rows.get(k[0], 0) + d["rows"]
         else:
-            for r in fine:
-                sink_rows[r["sink"]] = sink_rows.get(r["sink"], 0) + r["rows"]
-        n_input = n_input_fine
-        if n_input == 0:
-            agg_thread.join()
-            fine_grain.unpersist()
-            return None
-        bounds = (wm_bound_row["warc_ts"], wm_bound_row["url"])
-        if spill_lineage:
             # distributed per-partition lineage: one bounded rollup of the
             # cached fine-grain aggregate, written cluster-side — the
             # driver holds zero per-partition rows. Idempotent on resume
             # via the same last_batch guard the sinks use.
             lineage_tbl = self.wh.table("lineage")
             if lineage_tbl.state().get("last_batch") != batch_id:
-                parts = (
-                    fine_grain.groupBy("sink", "part_id")
-                    .agg(
-                        F.sum("n").alias("rows"),
-                        F.min("__ts_min").cast("string").alias("ts_min"),
-                        F.max("__ts_max").cast("string").alias("ts_max"),
-                        F.sum("__bytes").alias("bytes"),
-                    )
-                    .withColumn("batch_id", F.lit(batch_id))
-                )
                 lineage_tbl.append(
-                    parts,
+                    fine_grain.groupBy("sink", "part_id").agg(*_rollup_stats())
+                    .withColumnRenamed("n", "rows")
+                    .withColumn("batch_id", F.lit(batch_id)),
                     meta={"batch": batch_id},
                     state_update={"last_batch": batch_id},
                 )
-
-        timer.lap("observe")
+        bounds = (wm_bound_row["us"], wm_bound_row["url"])
+        lap("fan_out")
 
         # -- adopt staged partitions into the sink tables (in place, no move)
         sink_counts: dict[str, int] = {}
         for s in sorted(sink_rows):
             n_rows = sink_rows[s]
-            src_dir = _os.path.join(stage_dir, f"sink={s}")
+            src_dir = os.path.join(stage_dir, f"sink={s}")
             name = QUARANTINE_TABLE if s == QUARANTINE else f"{SINK_PREFIX}{s}"
             tbl = self.wh.table(name)
             if tbl.state().get("last_batch") == batch_id:
                 if s != QUARANTINE:
                     sink_counts[s] = tbl.state().get("last_batch_rows", 0)
                 continue  # resume: this sink already committed this batch
-            if _os.path.exists(src_dir):
+            if os.path.exists(src_dir):
                 tbl.register_dir(
                     src_dir,
                     meta={
@@ -675,89 +660,84 @@ class Pipeline:
             if s != QUARANTINE:
                 sink_counts[s] = n_rows
         n_routed = sum(sink_counts.values())
-        timer.lap("fan_out")
+        lap("aggregate")
 
-        # observation stats assembled DRIVER-SIDE from the fine-grouped
-        # rows (no extra scan) and committed as a driver-side arrow write
-        # (Table.append_rows) — zero Spark jobs for a ~|event classes|-row
-        # table; all commits stay independent and idempotent, and happen
-        # before the watermark advances (the overall commit point)
-        obs_acc: dict = {}
-        for r in obs_rows:
-            d = obs_acc.setdefault(
-                r["event_class"], {"n_observed": 0, "n_routed": 0, "n_dropped": 0}
-            )
-            d["n_observed"] += r["rows"]
-            if r["sink"] == QUARANTINE:
-                d["n_dropped"] += r["rows"]
-            else:
-                d["n_routed"] += r["rows"]
+        # -- observation stats ("observe even ignored events",
+        # EventImportJob.cs:93-94) and the per-sink north-rule aggregate,
+        # quarantine included. Both are driver-side arrow commits, each
+        # idempotent under its own last_batch guard, all before the
+        # watermark advances (the overall commit point).
         obs_tbl = self.wh.table("observations")
         if obs_tbl.state().get("last_batch") != batch_id:
+            dropped = pc.if_else(pc.equal(fine["sink"], QUARANTINE), fine["n"], 0)
+            obs = _rollup(
+                fine.append_column("n_dropped", dropped),
+                ["event_class"], [("n", "sum"), ("n_dropped", "sum")],
+            ).sort_by("event_class")
             obs_tbl.append_rows(
-                [
-                    (ec, d["n_observed"], d["n_routed"], d["n_dropped"], batch_id)
-                    for ec, d in sorted(obs_acc.items(), key=lambda kv: str(kv[0]))
-                ],
-                _OBS_SCHEMA,
+                pa.table({
+                    "event_class": obs["event_class"],
+                    "n_observed": obs["n"],
+                    "n_routed": pc.subtract(obs["n"], obs["n_dropped"]),
+                    "n_dropped": obs["n_dropped"],
+                    "batch_id": pa.array([batch_id] * obs.num_rows, pa.string()),
+                }),
                 meta={"batch": batch_id},
                 state_update={"last_batch": batch_id},
             )
-
-        agg_thread.join()
-        if "err" in agg_res:
-            raise agg_res["err"]
-
-        # post-mode dimension discovery: keys were collected on the agg
-        # thread from the persisted aggregate (no extra scan). Resume case
-        # (agg already committed): read back ONLY the files that batch's
-        # commit added (incremental snapshot read).
-        if post_discovery:
-            if self._dims_spilled:
-                # table path: hosts never touch the driver; langs stay in
-                # the (bounded) driver cache
-                batch_hosts = fine_grain.select("host").where(
-                    F.col("host").isNotNull()
-                ).distinct()
-                n_new_hosts = self._grow_hosts_table(batch_hosts, batch_id)
-                langs = agg_res.get("langs")
-                if langs is None:
-                    langs = fine_grain.select("lang").distinct().collect()
-                _, n_new_langs = self._grow_dims(
-                    set(), {r["lang"] for r in langs if r["lang"]}, batch_id
+        if agg_tbl.state().get("last_batch") != batch_id:
+            meta, state = {"batch": batch_id}, {"last_batch": batch_id}
+            if fine_grain is None:
+                agg = _rollup(fine, _AGG_KEYS, [("n", "sum")])
+                agg_tbl.append_rows(
+                    agg.append_column(
+                        "batch_id", pa.array([batch_id] * agg.num_rows, pa.string())
+                    ),
+                    meta=meta, state_update=state,
                 )
-                if self.cfg.detect_hot_hosts and agg_res.get("hot") is not None:
-                    self._hot_hosts = sorted(
-                        r["host"] for r in agg_res["hot"] if r["host"]
-                    )
             else:
-                kl = agg_res.get("kl")
-                if kl is None:  # resume: read back this batch's agg files
-                    keys_src = (
-                        agg_tbl.read_incremental(self.spark, agg_res["sid"])
-                        if agg_res.get("sid") is not None
-                        else agg_tbl.read(self.spark).where(F.col("batch_id") == batch_id)
-                    )
-                    kl = (
-                        keys_src.groupBy("host", "lang")
-                        .agg(F.sum("n").alias("n"))
-                        .collect()
-                    )
-                n_new_hosts, n_new_langs = self._grow_dims(
-                    {k["host"] for k in kl if k["host"]},
-                    {k["lang"] for k in kl if k["lang"]},
-                    batch_id,
+                agg_tbl.append(
+                    fine_grain.groupBy(*_AGG_KEYS).agg(F.sum("n").alias("n"))
+                    .withColumn("batch_id", F.lit(batch_id)),
+                    meta=meta, state_update=state,
                 )
-                if self.cfg.detect_hot_hosts:
-                    host_totals: dict[str, int] = {}
-                    for r in kl:
-                        if r["host"]:
-                            host_totals[r["host"]] = host_totals.get(r["host"], 0) + r["n"]
-                    self._hot_hosts = sorted(
-                        h for h, n in host_totals.items() if n >= hot_thr
-                    )
-        fine_grain.unpersist()
-        timer.lap("aggregate")
+
+        # post-mode dimension discovery + hot-host detection from the same
+        # fine grain (no extra scan, and on resume no read-back)
+        if post_discovery and self._dims_spilled:
+            # table path: hosts never touch the driver — hot candidates
+            # are filtered to >= threshold (≤ 1/salt_threshold rows by
+            # construction) and langs are a bounded distinct
+            batch_hosts = fine_grain.select("host").where(
+                F.col("host").isNotNull()
+            ).distinct()
+            n_new_hosts = self._grow_hosts_table(batch_hosts, batch_id)
+            langs = fine_grain.select("lang").distinct().collect()
+            _, n_new_langs = self._grow_dims(
+                set(), {r["lang"] for r in langs if r["lang"]}, batch_id
+            )
+            if self.cfg.detect_hot_hosts:
+                hot = (
+                    fine_grain.groupBy("host").agg(F.sum("n").alias("n"))
+                    .where(F.col("n") >= F.lit(hot_thr)).collect()
+                )
+                self._hot_hosts = sorted(r["host"] for r in hot if r["host"])
+        elif post_discovery:
+            kl = (
+                _rollup(fine, ["host", "lang"], [("n", "sum")]) if fine_grain is None
+                else fine_grain.groupBy("host", "lang").agg(F.sum("n").alias("n")).toArrow()
+            )
+            n_new_hosts, n_new_langs = self._grow_dims(
+                set(pc.unique(kl["host"]).drop_null().to_pylist()),
+                set(pc.unique(kl["lang"]).drop_null().to_pylist()),
+                batch_id,
+            )
+            if self.cfg.detect_hot_hosts:
+                hosts = _rollup(kl, ["host"], [("n", "sum")])
+                hosts = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
+                self._hot_hosts = sorted(hosts["host"].drop_null().to_pylist())
+        if fine_grain is not None:
+            fine_grain.unpersist()
 
         # -- advance watermark (the overall batch commit point)
         new_wm = advance(bounds, wm)
@@ -766,6 +746,7 @@ class Pipeline:
             **new_wm.to_state(), n_batches=n_batches, last_batch=batch_id,
             hot_hosts=self._hot_hosts, dims_spilled=self._dims_spilled,
         )
+        lap()
 
         total = timer.total()
         result = BatchResult(
@@ -790,6 +771,8 @@ class Pipeline:
                 "sink_counts": sink_counts,
                 "docs_per_sec": result.docs_per_sec,
                 "stage_seconds": result.stages,
+                "stage_jobs": jobs.stage_jobs,
+                "spark_jobs": jobs.n_jobs(),
                 "watermark": result.watermark,
                 "stage_dir": stage_dir,
                 "committed_at": time.time(),

@@ -28,6 +28,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -185,7 +186,7 @@ class Table:
         w.parquet(os.path.join(self.path, d))
         return d
 
-    def _check_schema(self, m: dict, df: DataFrame) -> None:
+    def _check_schema(self, m: dict, schema: StructType) -> None:
         """Iceberg-style append-time schema validation: a mismatched frame
         fails LOUDLY at commit time, not as a cryptic merge error at some
         later read. Field order is irrelevant (parquet reads by name);
@@ -198,7 +199,7 @@ class Table:
         }
         got = {
             (f["name"], json.dumps(f["type"], sort_keys=True))
-            for f in json.loads(df.schema.json())["fields"]
+            for f in json.loads(schema.json())["fields"]
         }
         if want != got:
             missing = sorted(n for n, _ in want - got)
@@ -217,7 +218,7 @@ class Table:
         coalesce: int | None = None,
     ) -> int:
         m = self._load()
-        self._check_schema(m, df)
+        self._check_schema(m, df.schema)
         d = self._write_dir(df, partition_by, coalesce)
         prev = m["current"]
         prev_dirs = (
@@ -301,63 +302,29 @@ class Table:
         self._commit(m)
         return sid
 
-    # pyarrow twins of Spark's simple types for driver-side micro-commits
-    _PA_TYPES = {
-        "string": "string", "long": "int64", "integer": "int32",
-        "double": "float64", "boolean": "bool_",
-    }
-
-    def _rows_write_dir(self, rows: list[tuple], schema: StructType) -> str:
-        self._check_writable()
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pa_schema = pa.schema(
-            [
-                pa.field(f.name, getattr(pa, self._PA_TYPES[f.dataType.typeName()])())
-                for f in schema.fields
-            ]
-        )
-        cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-        tbl = pa.table(
-            {f.name: list(c) for f, c in zip(schema.fields, cols)},
-            schema=pa_schema,
-        )
-        d = f"data-{uuid.uuid4().hex[:12]}"
-        os.makedirs(os.path.join(self.path, d), exist_ok=True)
-        pq.write_table(tbl, os.path.join(self.path, d, "part-00000.parquet"))
-        return d
-
     def append_rows(
         self,
-        rows: list[tuple],
-        schema: StructType,
+        rows: pa.Table,
         meta: dict | None = None,
         state_update: dict | None = None,
     ) -> int:
         """Driver-side small-table append: ONE parquet file written via
-        pyarrow — no Spark job at all. Per-batch micro-commits
-        (observation stats, dim growth) are part of the pipeline's serial
-        fraction; a Spark write job costs 0.2-0.5 s of driver scheduling
-        for a 5-row table, the arrow write costs ~1 ms. Simple types only
-        (string/long/int/double/bool — these tables carry no timestamps).
-        Same append-time schema validation as DataFrame appends."""
+        pyarrow — no Spark job at all. Per-batch commits the driver already
+        holds (observation stats, dim growth, the per-batch aggregate) are
+        part of the pipeline's serial fraction; a Spark write job costs
+        0.2-0.5 s of driver scheduling, the arrow write a few ms. Same
+        append-time schema validation as DataFrame appends, on the Spark
+        types of the arrow columns."""
+        self._check_writable()
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         m = self._load()
-        if m["schema"] is not None:
-            want = {
-                (f["name"], json.dumps(f["type"], sort_keys=True))
-                for f in json.loads(m["schema"])["fields"]
-            }
-            got = {
-                (f.name, json.dumps(f.dataType.jsonValue(), sort_keys=True))
-                for f in schema.fields
-            }
-            if want != got:
-                raise ValueError(
-                    f"append_rows to table {self.name!r} with incompatible "
-                    f"schema: want {sorted(want)}, got {sorted(got)}"
-                )
-        d = self._rows_write_dir(rows, schema)
+        schema = from_arrow_schema(rows.schema)
+        self._check_schema(m, schema)
+        d = f"data-{uuid.uuid4().hex[:12]}"
+        os.makedirs(os.path.join(self.path, d), exist_ok=True)
+        pq.write_table(rows, os.path.join(self.path, d, "part-00000.parquet"))
         prev = m["current"]
         prev_dirs = (
             next(x for x in m["snapshots"] if x["id"] == prev)["dirs"] if prev is not None else []

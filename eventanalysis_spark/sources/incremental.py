@@ -16,14 +16,17 @@ materialization)."""
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_EPOCH = datetime(1970, 1, 1)
 
 
 @dataclass(frozen=True)
 class Watermark:
-    ts: str | None = None   # ISO timestamp of last ingested row
+    ts: str | None = None   # UTC 'yyyy-MM-dd HH:mm:ss[.ffffff]' of last ingested row
     url: str | None = None  # tie-break within equal ts
 
     @classmethod
@@ -37,22 +40,38 @@ class Watermark:
         return self.ts is None
 
 
+def _ts_literal(ts: str) -> Column:
+    """The watermark timestamp as a Spark literal, independent of the
+    driver's and the session's time zone: the stored zone-less string is
+    UTC (what `advance` stores, and what older releases stored under the
+    UTC driver and session the session factory pins)."""
+    return F.lit(ts + "Z").cast("timestamp")
+
+
 def above_watermark(df: DataFrame, wm: Watermark) -> DataFrame:
     """Strictly-after filter on the (warc_ts, url) total order — the
     `rid > watermark` pushdown analog."""
     if wm.is_unset():
         return df
-    ts = F.lit(wm.ts).cast("timestamp")
+    ts = _ts_literal(wm.ts)
     return df.where(
         (F.col("warc_ts") > ts)
         | ((F.col("warc_ts") == ts) & (F.col("url") > F.lit(wm.url)))
     )
 
 
-def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFrame:
-    """One bounded micro-batch in watermark order. cap=None → everything
-    above the watermark. Default cap mirrors the reference's 20k
-    (event_db_updater/AppUpdate.fs:44).
+def max_key() -> Column:
+    """max over the (warc_ts, url) order with the timestamp as epoch
+    microseconds: the bound reaches the driver as an integer, never as a
+    datetime converted through the driver's local zone."""
+    return F.max(F.struct(F.unix_micros("warc_ts").alias("us"), F.col("url")))
+
+
+def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFrame | None:
+    """One bounded micro-batch in watermark order, or None when nothing is
+    left above the watermark (capped calls only: cap=None → everything
+    above the watermark, possibly empty, with no job run here). Default
+    cap mirrors the reference's 20k (event_db_updater/AppUpdate.fs:44).
 
     Scale note: a naive `orderBy(...).limit(cap)` plans as
     TakeOrderedAndProject, which funnels the WHOLE batch into ONE
@@ -72,12 +91,12 @@ def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFra
         inc.select("warc_ts", "url")
         .orderBy(F.col("warc_ts").asc(), F.col("url").asc())
         .limit(cap)
-        .agg(F.max(F.struct(F.col("warc_ts"), F.col("url"))).alias("m"))
+        .agg(max_key().alias("m"))
         .collect()[0]["m"]
     )
     if bound is None:  # source exhausted
-        return inc.where(F.lit(False))
-    b_ts = F.lit(bound["warc_ts"]).cast("timestamp")
+        return None
+    b_ts = F.timestamp_micros(F.lit(bound["us"]))
     b_url = F.lit(bound["url"])
     return inc.where(
         (F.col("warc_ts") < b_ts)
@@ -86,18 +105,18 @@ def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFra
 
 
 def advance(batch_max: tuple | None, wm: Watermark) -> Watermark:
-    """New watermark from the batch's max (warc_ts, url); None batch → keep."""
+    """New watermark from the batch's max (epoch micros, url) key; None
+    batch → keep. The timestamp is stored as a zone-less UTC string."""
     if batch_max is None:
         return wm
-    ts, url = batch_max
-    return Watermark(ts=str(ts), url=url)
+    us, url = batch_max
+    ts = (_EPOCH + timedelta(microseconds=us)).isoformat(sep=" ")
+    return Watermark(ts=ts, url=url)
 
 
 def batch_bounds(batch: DataFrame) -> tuple | None:
-    """Max (warc_ts, url) of the batch — one tiny aggregate."""
-    row = batch.agg(
-        F.max(F.struct(F.col("warc_ts"), F.col("url"))).alias("m")
-    ).collect()[0]
+    """Max (epoch micros, url) key of the batch — one tiny aggregate."""
+    row = batch.agg(max_key().alias("m")).collect()[0]
     if row["m"] is None:
         return None
-    return (row["m"]["warc_ts"], row["m"]["url"])
+    return (row["m"]["us"], row["m"]["url"])

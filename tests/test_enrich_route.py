@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,9 @@ from eventanalysis_spark.operators.parse import parse_pages
 from eventanalysis_spark.operators.route import (
     apply_rules,
     observation_counts,
+    route_by,
     routed_only,
+    rule_lookup,
 )
 
 
@@ -115,6 +119,21 @@ def test_drop_reason_triage(spark, parsed):
     from eventanalysis_spark.operators.route import routed_only
 
     assert "drop_reason" not in routed_only(wr).columns
+
+
+def test_rule_lookup_reused_across_frames(spark, parsed):
+    """One rule lookup, built once, routes any number of frames exactly
+    like apply_rules does per frame."""
+    enriched = enrich_pages(
+        parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)
+    )
+    rules = datagen.route_rules_df(spark)
+    rule = rule_lookup(rules)
+    cols = ["url", "allowed", "drop_reason", "sink"]
+    for frame in (enriched, enriched.where(F.col("ever") >= 2)):
+        got = route_by(frame, rule).select(cols).collect()
+        want = apply_rules(frame, rules).select(cols).collect()
+        assert got and Counter(map(tuple, got)) == Counter(map(tuple, want))
 
 
 def test_observation_includes_dropped(spark, parsed):

@@ -58,9 +58,21 @@ def test_watermark_resume_across_instances(spark, pages, wh):
     assert total == rf.n_routed
 
 
+def _obs_totals(p):
+    return {
+        r["event_class"]: (r["o"], r["r"], r["d"])
+        for r in p.wh.table("observations").read(p.spark)
+        .groupBy("event_class")
+        .agg(F.sum("n_observed").alias("o"), F.sum("n_routed").alias("r"),
+             F.sum("n_dropped").alias("d"))
+        .collect()
+    }
+
+
 def test_partial_failure_is_idempotent(spark, pages, wh):
     """Simulate a crash after sinks committed but before the watermark
-    advanced: re-running the batch must not duplicate sink rows."""
+    advanced: re-running the batch must not duplicate sink rows, and must
+    not double-count the sink_agg and observation commits either."""
     p = _mk(spark, wh, cap=1500)
     r1 = p.run_batch(pages)
     assert r1 is not None
@@ -75,6 +87,29 @@ def test_partial_failure_is_idempotent(spark, pages, wh):
     for s in r1.sink_counts:
         tbl = p.sink_table(s)
         assert tbl.count() == tbl.select("url").distinct().count()
+
+    # crash inside the watermark commit, after every other commit of the
+    # batch (sinks, sink_agg, observations) landed; a new instance redoes it
+    crashed = _mk(spark, wh + "_crash", cap=1500)
+
+    def crash(**_kv):
+        raise RuntimeError("crash before the watermark commit")
+
+    crashed.state_tbl.set_state = crash
+    with pytest.raises(RuntimeError, match="watermark commit"):
+        crashed.run_batch(pages)
+    assert crashed.wh.table("sink_agg").state()["last_batch"] == "b000001"
+    assert crashed.wh.table("observations").state()["last_batch"] == "b000001"
+    resumed = _mk(spark, wh + "_crash", cap=1500)
+    assert [x.batch_id for x in resumed.run_until_exhausted(pages)] == [
+        "b000001", "b000002"
+    ]
+    ref = _mk(spark, wh + "_ref", cap=1500)
+    ref.run_until_exhausted(pages)
+    assert resumed.total_sink_aggregates().toPandas().equals(
+        ref.total_sink_aggregates().toPandas()
+    )
+    assert _obs_totals(resumed) == _obs_totals(ref)
 
 
 def test_observation_counts_include_dropped(spark, pages, wh):
@@ -325,3 +360,125 @@ def test_dim_spill_pre_mode_uses_table_path(spark, pages, wh):
         a = {x.url for x in p.sink_table(s).select("url").collect()}
         b = {x.url for x in q.sink_table(s).select("url").collect()}
         assert a == b, s
+
+
+def test_batch_job_counts_in_sidecar(spark, pages, wh):
+    """Each batch's Spark jobs run under the job group pagelog-<batch_id>
+    and the sidecar records them per stage: a capped batch runs at most
+    6 jobs, the call that finds the source exhausted at most 1, and the
+    caller's own job group is restored afterwards."""
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        p = _mk(spark, wh, cap=1500)
+        assert len(p.run_until_exhausted(pages)) == 2
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    mdir = os.path.join(p.state_tbl.path, "_metrics")
+
+    def sidecar(batch_id):
+        with open(os.path.join(mdir, f"batch-{batch_id}.json")) as f:
+            return json.load(f)
+
+    for b in ("b000001", "b000002"):
+        m = sidecar(b)
+        assert set(m["stage_jobs"]) == {
+            "discover_dims", "parse_route_write", "observe", "fan_out", "aggregate"
+        }
+        ids = [j for js in m["stage_jobs"].values() for j in js]
+        assert m["spark_jobs"] == len(ids) == len(set(ids))
+        assert 0 < m["spark_jobs"] <= 6, m["stage_jobs"]
+        assert sc.statusTracker().getJobIdsForGroup(f"pagelog-{b}")
+    idle = sidecar("b000003")
+    assert idle["exhausted"] is True
+    assert idle["spark_jobs"] <= 1, idle["stage_jobs"]
+
+
+def test_recurring_job_group_counts_own_jobs(spark, pages, tmp_path):
+    """Fresh warehouses reuse batch id b000001, so the job group
+    pagelog-b000001 recurs: each call's sidecar lists only its own jobs."""
+    seen = []
+    for i in range(2):
+        p = _mk(spark, str(tmp_path / f"w{i}"), cap=None)
+        assert p.run_batch(pages).batch_id == "b000001"
+        with open(os.path.join(p.state_tbl.path, "_metrics", "batch-b000001.json")) as f:
+            m = json.load(f)
+        ids = [j for js in m["stage_jobs"].values() for j in js]
+        assert 0 < m["spark_jobs"] == len(ids) <= 6, m["stage_jobs"]
+        seen.append(set(ids))
+    assert not seen[0] & seen[1]
+    assert seen[0] | seen[1] <= set(
+        spark.sparkContext.statusTracker().getJobIdsForGroup("pagelog-b000001")
+    )
+
+
+def test_enrich_route_plan_has_no_rdd_scan(spark, pages, wh):
+    """With driver-cached dims, the dims and rules enter the wide pass as
+    local relations: no Python-RDD scan (which would need Python workers
+    to serve a broadcast) anywhere in the enrich/route plan."""
+    p = _mk(spark, wh, cap=None)
+    plan = p._staged(pages)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+_TZ_DRAIN = """
+import json, shutil, sys
+from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
+from eventanalysis_spark.session import get_spark
+
+pages_path, wh = sys.argv[1], sys.argv[2]
+spark = get_spark("tz-drain", master="local[2]", shuffle_partitions=2,
+                  extra_conf={"spark.driver.memory": "1g"})
+pages = spark.read.parquet(pages_path)
+sinks = ["content", "commerce", "security", "misc"]
+
+def urls(p):
+    return {s: sorted(r.url for r in p.sink_table(s).select("url").collect())
+            for s in sinks}
+
+def mk(path, cap):
+    return Pipeline(spark, PipelineConfig(warehouse=path, cap=cap))
+
+out = {}
+capped = mk(wh + "/capped", 1100)
+out["n_batches"] = len(capped.run_until_exhausted(pages, max_batches=8))
+out["capped"] = urls(capped)
+single = mk(wh + "/single", None)
+single.run_batch(pages)
+out["single"] = urls(single)
+first = mk(wh + "/resume", 1100)
+first.run_batch(pages)
+second = mk(wh + "/resume", 1100)
+out["resumed_batches"] = len(second.run_until_exhausted(pages, max_batches=8))
+out["resumed"] = urls(second)
+print("RESULT " + json.dumps(out))
+"""
+
+
+@pytest.mark.parametrize("tz", ["Asia/Tokyo", "America/New_York"])
+def test_watermark_drain_is_zone_free(pages_path, tmp_path, tz):
+    """The watermark never passes through the driver's local time zone: a
+    capped drain under a non-UTC driver TZ terminates, ingests exactly
+    the rows of one uncapped batch, and a new Pipeline on the same
+    warehouse resumes without loss or duplication."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": tz,
+           "PYTHONPATH": os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run(
+        [sys.executable, "-c", _TZ_DRAIN, pages_path, str(tmp_path / "wh")],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    out = json.loads(lines[-1][len("RESULT "):])
+    assert out["n_batches"] == 3  # 3000 rows / cap 1100, then exhausted
+    assert out["capped"] == out["single"]
+    assert out["resumed_batches"] == 2
+    assert out["resumed"] == out["single"]

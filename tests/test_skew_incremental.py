@@ -14,6 +14,7 @@ from eventanalysis_spark.operators.skew import (
 )
 from eventanalysis_spark.sources.incremental import (
     Watermark,
+    advance,
     above_watermark,
     batch_bounds,
     next_batch,
@@ -102,10 +103,9 @@ def test_capped_batches_advance_through_ties(spark):
     seen = []
     for _ in range(10):
         b = next_batch(df, wm, cap=3)
-        bounds = batch_bounds(b)
-        if bounds is None:
+        if b is None:
             break
         seen.extend(r.url for r in b.collect())
-        wm = Watermark(ts=str(bounds[0]), url=bounds[1])
+        wm = advance(batch_bounds(b), wm)
     assert seen == sorted(seen)
     assert len(seen) == 10  # every tie eventually consumed exactly once

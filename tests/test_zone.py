@@ -5,6 +5,7 @@ job/channel rejection."""
 import json
 import os
 
+import pyarrow as pa
 import pytest
 
 from eventanalysis_spark.sources.zone import (
@@ -64,7 +65,7 @@ def test_readonly_warehouse_blocks_every_mutation(tmp_path, spark):
     for call in (
         lambda: t.append(df),
         lambda: t.overwrite(df),
-        lambda: t.append_rows([(2, "b")], df.schema),
+        lambda: t.append_rows(pa.table({"id": pa.array([2], pa.int32()), "v": ["b"]})),
         lambda: t.register_dir(str(tmp_path)),
         lambda: t.set_state(x=1),
         lambda: t.delete_where(spark, "id = 1"),
