@@ -1,15 +1,13 @@
-"""Per-partition lineage + throughput metrics (north-rule requirement;
+"""Per-batch throughput and job metrics (north-rule requirement;
 reference tag-file analog, EventJob.cs:125-159 T3).
 
 Two layers:
-  - partition_stats(df): a one-pass DataFrame aggregate keyed by
-    spark_partition_id → rows / bytes / ts range per physical partition
-    (the lineage record of what each task actually processed);
   - StageTimer: driver-side wall-clock per pipeline stage → docs/sec;
   - JobGroup: the Spark job ids each pipeline stage ran, from the job
     group the stage's jobs are tagged with.
 
-Metrics are committed as snapshot metadata on the destination table plus a
+The per-partition lineage is rolled up by the pipeline from its stats
+grain (pipeline.py). Metrics are committed as snapshot metadata on the destination table plus a
 JSON sidecar under <warehouse>/<table>/_metrics/ so they survive and are
 greppable (the reference's tag files next to the DB)."""
 
@@ -18,26 +16,6 @@ from __future__ import annotations
 import json
 import os
 import time
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def partition_stats(df: DataFrame, bytes_col: str | None = "n_bytes") -> list[dict]:
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.min("warc_ts").cast("string").alias("ts_min"),
-        F.max("warc_ts").cast("string").alias("ts_max"),
-    ]
-    if bytes_col and bytes_col in df.columns:
-        aggs.append(F.sum(bytes_col).alias("bytes"))
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(*aggs)
-        .orderBy("partition")
-        .collect()
-    )
-    return [r.asDict() for r in rows]
 
 
 class StageTimer:

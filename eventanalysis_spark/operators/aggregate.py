@@ -1,4 +1,4 @@
-"""Aggregation operators — SURVEY.md §2.4 (A1-A8) + §2.5 W3/W4.
+"""Aggregation operators — SURVEY.md §2.4 (A1-A8) + §2.5 W4.
 
 All are single hash-aggregates with map-side partial aggregation; the only
 deliberate structural choice vs the reference is A2: the reference joins
@@ -95,55 +95,4 @@ def period_rollup(
             F.avg(bytes_col).alias("avg_bytes"),
         )
         .orderBy("period", *(extra_keys or []))
-    )
-
-
-def host_rollup(overview_df: DataFrame) -> DataFrame:
-    """A6: second-level regroup of the overview by host: distinct
-    (lang,class) combos + total events + a uniqueness audit column
-    (AppOverview2.fs:110-139)."""
-    return (
-        overview_df.groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_combos"),
-            F.sum("n_events").alias("n_events"),
-            F.countDistinct("event_class").alias("n_classes"),
-        )
-        .withColumn("ambiguous", F.col("n_combos") > F.col("n_classes"))
-        .orderBy("host")
-    )
-
-
-def sink_aggregates(routed: DataFrame, period: str = "day") -> DataFrame:
-    """THE north-rule per-sink aggregate: counts by
-    (sink, host, lang, event_class, period-bucket). Must match the oracle
-    exactly — every column aliased, deterministic order."""
-    return (
-        routed.groupBy(
-            "sink",
-            "host",
-            "lang",
-            "event_class",
-            period_key(F.col("warc_ts"), period).alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("sink", "host", "lang", "event_class", "bucket")
-    )
-
-
-def tumbling_window_rollup(fact: DataFrame, duration: str = "1 day") -> DataFrame:
-    """W3 via Spark's native event-time tumbling window (the reference's
-    month-boundary probe, ArchiveBuilder.cs:139-193, exists only because
-    SQLite has no window semantics — Spark's `window()` is the direct
-    primitive)."""
-    return (
-        fact.groupBy(F.window(F.col("warc_ts"), duration).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_bytes").alias("total_bytes"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "n",
-            "total_bytes",
-        )
-        .orderBy("w_start")
     )

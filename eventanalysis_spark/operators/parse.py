@@ -503,13 +503,6 @@ FEATURED_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(FEATURED_SCHEMA)
-def _parse_featured_udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-    base, toks = parse_batch(url, html, _with_tokens=True)
-    feats = text_feature_batch(base["text_extracted"], tokens=toks)
-    return pd.concat([base, feats], axis=1)
-
-
 _META_ANY = re.compile(r'<meta name="([^"]*)" content="([^"]*)">|<meta content="([^"]*)">')
 
 
@@ -539,13 +532,14 @@ def meta_map_udf(html: pd.Series) -> pd.Series:
     return meta_map_batch(html)
 
 
-def parse_pages_fused(pages: DataFrame, features: bool = True) -> DataFrame:
+def parse_pages_fused(pages: DataFrame) -> DataFrame:
     """Pipeline wide-pass variant of parse_pages: mapInPandas instead of a
-    pandas_udf struct column. The passthrough columns (url, warc_ts, lang)
-    ride the Arrow batch through Python and the output rows come back
-    fully assembled — no JVM-side struct expand / input-batch zip.
-    Measured ~5-8% faster end-to-end than the struct form, and steadier
-    under CPU contention (tools/ab_parse_udf.py).
+    pandas_udf struct column, with the text features (text_feature_batch)
+    computed in the same Arrow batch. The passthrough columns (url,
+    warc_ts, lang) ride the Arrow batch through Python and the output rows
+    come back fully assembled — no JVM-side struct expand / input-batch
+    zip. Measured ~5-8% faster end-to-end than the struct form, and
+    steadier under CPU contention.
 
     Trade-off: mapInPandas is a pushdown BARRIER — downstream filters on
     (url, warc_ts, lang) cannot reach the scan through it. The pipeline's
@@ -553,31 +547,29 @@ def parse_pages_fused(pages: DataFrame, features: bool = True) -> DataFrame:
     composable query paths keep the filter-transparent parse_pages."""
     from pyspark.sql.types import StructField, TimestampType
 
-    schema = FEATURED_SCHEMA if features else PARSED_SCHEMA
     out_schema = StructType(
         [
             StructField("url", StringType()),
             StructField("warc_ts", TimestampType()),
             StructField("lang", StringType()),
         ]
-        + schema.fields
+        + FEATURED_SCHEMA.fields
     )
 
     def gen(batches):
         for pdf in batches:
             base, toks = parse_batch(pdf["url"], pdf["html"], _with_tokens=True)
-            parts = [pdf[["url", "warc_ts", "lang"]].reset_index(drop=True), base]
-            if features:
-                parts.append(text_feature_batch(base["text_extracted"], tokens=toks))
-            yield pd.concat(parts, axis=1)
+            yield pd.concat(
+                [pdf[["url", "warc_ts", "lang"]].reset_index(drop=True), base,
+                 text_feature_batch(base["text_extracted"], tokens=toks)],
+                axis=1,
+            )
 
     valid = pages.where(F.col("url").isNotNull() & F.col("warc_ts").isNotNull())
     return valid.select("url", "warc_ts", "lang", "html").mapInPandas(gen, out_schema)
 
 
-def parse_pages(
-    pages: DataFrame, keep_payload: bool = False, features: bool = False
-) -> DataFrame:
+def parse_pages(pages: DataFrame, keep_payload: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → parsed header frame.
 
     Emits the narrow 'EventHeader-analog' projection by default — the
@@ -585,15 +577,10 @@ def parse_pages(
     Parquet column pruning + dropping the blob after extraction. Filters on
     (url, warc_ts, lang) stay pushable below the UDF; parsed-column filters
     apply after. Validity filter per EventRecordSource.cs:75-78: drop rows
-    missing identity or timestamp.
-
-    features=True fuses the quality/lang-id/fingerprint text features into
-    the same Arrow batch (see text_feature_batch)."""
+    missing identity or timestamp."""
     valid = pages.where(F.col("url").isNotNull() & F.col("warc_ts").isNotNull())
-    udf = _parse_featured_udf if features else _parse_udf
-    schema = FEATURED_SCHEMA if features else PARSED_SCHEMA
-    parsed = valid.withColumn("p", udf(F.col("url"), F.col("html")))
-    cols = ["url", "warc_ts", "lang"] + [f"p.{f.name}" for f in schema.fields]
+    parsed = valid.withColumn("p", _parse_udf(F.col("url"), F.col("html")))
+    cols = ["url", "warc_ts", "lang"] + [f"p.{f.name}" for f in PARSED_SCHEMA.fields]
     if keep_payload:
         cols = ["url", "warc_ts", "lang", "html", "text"] + cols[3:]
     return parsed.select(*cols)

@@ -181,8 +181,9 @@ def k_spread_sample(
             .where(F.col("__gidx").isin(idx))
             .drop("__pid", "__off", "__gidx")
         )
-        rows = picked.collect()
-        return sess.createDataFrame(rows, picked.schema)
+        # through Arrow, not Rows: a collected Row carries a naive
+        # driver-local datetime, ambiguous in a DST fall-back hour
+        return sess.createDataFrame(picked.toArrow(), picked.schema)
     finally:
         ranged.unpersist()
 

@@ -10,18 +10,15 @@ Parity targets:
 
 Spark-first: the rule table is tiny → a literal map lookup, so routing adds
 no join, no shuffle and no broadcast; the router returns ONE DataFrame
-with (sink, allowed) columns and `fan_out` performs N filtered writes off
-a single cached pass.
+with (sink, allowed) columns, and the pipeline writes every sink from that
+single pass with one partitionBy(sink) write (pipeline.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SINK = "misc"
 
@@ -120,32 +117,3 @@ def observation_counts(with_rules: DataFrame, class_col: str = "event_class") ->
         .orderBy(class_col)
     )
 
-
-def fan_out(
-    with_rules: DataFrame,
-    write_sink: Callable[[str, DataFrame], None],
-    sinks: list[str] | None = None,
-    cache: bool = True,
-) -> dict[str, int]:
-    """One cached pass → N filtered sink writes (multi-sink routing).
-
-    At 100 TB the cache is MEMORY_AND_DISK_DESER on the routed projection
-    only (post-parse, payload dropped), so each sink write re-reads the
-    cached columnar blocks instead of re-running the parse UDF N times.
-    Returns per-sink routed-row counts (the per-sink aggregate the north
-    rule pins)."""
-    routed = routed_only(with_rules)
-    if sinks is None:
-        sinks = [r["sink"] for r in routed.select("sink").distinct().collect()]
-    if cache:
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    counts: dict[str, int] = {}
-    try:
-        for s in sorted(sinks):
-            part = routed.where(F.col("sink") == s)
-            write_sink(s, part)
-            counts[s] = part.count()
-    finally:
-        if cache:
-            routed.unpersist()
-    return counts

@@ -62,7 +62,7 @@ from eventanalysis_spark import datagen
 from eventanalysis_spark.functions.scalars import period_key
 from eventanalysis_spark.metrics import JobGroup, StageTimer, write_metrics_sidecar
 from eventanalysis_spark.operators.enrich import enrich_pages
-from eventanalysis_spark.operators.parse import parse_pages, parse_pages_fused
+from eventanalysis_spark.operators.parse import parse_pages_fused
 from eventanalysis_spark.operators.route import route_by, rule_lookup
 from eventanalysis_spark.sources.catalog import Warehouse
 from eventanalysis_spark.sources.incremental import (
@@ -103,6 +103,14 @@ _LANG_SCHEMA = StructType([
 _FINE_KEYS = ("sink", "part_id", "event_class", "host", "lang")
 # grain of the per-batch sink_agg rows
 _AGG_KEYS = ["sink", "host", "lang", "event_class", "bucket"]
+# Staged-write codec: interleaved min-of-4 wide-pass timings at 400k/32c
+# measured snappy fastest (2.18-2.38s) vs lz4 (2.40-2.86s) and zstd
+# (2.40-2.83s) at BOTH bench split sizes, with output bytes on par with
+# lz4 (27.7 vs 29.0 MB). Snappy also decompresses fast for the staged
+# stats re-read. Sink tables adopt the staged files in place, so cold data
+# is recompressed to zstd by Table.compact (the Iceberg rewrite_data_files
+# / reference-vacuum maintenance step, S12).
+_STAGING_CODEC = "snappy"
 
 
 def _row_stats() -> list[Column]:
@@ -158,6 +166,30 @@ def _local_df(spark: SparkSession, rows: list[dict], schema: StructType) -> Data
     return spark.createDataFrame(_arrow_rows(rows, schema), schema)
 
 
+def wide_pass(
+    pages: DataFrame,
+    host_info: DataFrame,
+    lang_info: DataFrame,
+    rule: Column,
+    default_sink: str = datagen.DEFAULT_SINK,
+    broadcast_host: bool = True,
+) -> DataFrame:
+    """The transformation graph shared by the batch pipeline and the
+    streaming router: parse (with the fused text features) → enrich →
+    route by the `rule_lookup` column `rule`, with the target sink
+    (QUARANTINE for dropped rows) and the write task's partition id.
+    Features ride the same Arrow batch as the parse — measured 4.3s/1.6M
+    docs cheaper than equivalent JVM expressions appended after the UDF
+    (each is another full pass over the text column)."""
+    enriched = enrich_pages(
+        parse_pages_fused(pages), host_info, lang_info, broadcast_host=broadcast_host
+    )
+    return route_by(enriched, rule, default_sink).withColumns({
+        "sink": F.when(F.col("allowed"), F.col("sink")).otherwise(F.lit(QUARANTINE)),
+        "part_id": F.spark_partition_id(),
+    }).drop("allowed")
+
+
 def validate_sink_name(sink: str) -> None:
     """Reject sinks that are malformed or would shadow an internal table."""
     if not isinstance(sink, str) or not _SINK_NAME_RE.match(sink):
@@ -178,24 +210,8 @@ class PipelineConfig:
     cap: int | None = 20000
     period: str = "day"
     default_sink: str = datagen.DEFAULT_SINK
-    id_mode: str = "sequential"
     salt_threshold: float = 0.05
     salt_n: int = 16
-    detect_hot_hosts: bool = True
-    compute_text_features: bool = True  # quality/lang-id/fingerprint per doc
-    # Wide-pass transport: mapInPandas emits assembled rows from Python
-    # (no JVM struct expand/zip; ~5-8% faster at 400k/32c) but moves the
-    # passthrough columns (url, warc_ts, lang) through Arrow both ways;
-    # False = pandas_udf struct column (passthroughs stay JVM-side).
-    fused_parse: bool = True
-    # Hot-path codec: interleaved min-of-4 wide-pass timings at 400k/32c
-    # measured snappy fastest (2.18-2.38s) vs lz4 (2.40-2.86s) and zstd
-    # (2.40-2.83s) at BOTH bench split sizes, with output bytes on par
-    # with lz4 (27.7 vs 29.0 MB). Snappy also decompresses fast for the
-    # staged stats re-read. Sink tables adopt the staged files in place,
-    # so cold data is recompressed to zstd by Table.compact (the Iceberg
-    # rewrite_data_files / reference-vacuum maintenance step, S12).
-    staging_codec: str = "snappy"
     # Driver dim-cache ceiling. Below it, host/lang dims live on the
     # driver (the reference's ProviderInfoCache shape: tiny dims enriched
     # as broadcast local relations, driver-side sequential ids, and the
@@ -219,10 +235,6 @@ class PipelineConfig:
     # observation grain) and each sink commit carries a
     # {"lineage_ref": ...} pointer.
     lineage_inline_max: int = 4096
-    discovery: str = "post"  # "post": new dim keys from the staged batch
-    # aggregate (no extra source scan; ids attach from the NEXT batch on) |
-    # "pre": strict reference ordering (ProviderInfoCache semantics — ids
-    # visible to the same batch's facts) at the cost of one extra scan
     repartition: int | None = None  # xxhash64(url) partitions; None = leave as scanned
 
 
@@ -403,28 +415,6 @@ class Pipeline:
         return f"b{n + 1:06d}"
 
     # ---- one batch -------------------------------------------------------
-    def _staged(self, batch: DataFrame) -> DataFrame:
-        """The wide pass up to the write: parse (+fused text features) →
-        enrich → route, with the target sink (QUARANTINE for dropped rows)
-        and the write task's partition id. Features ride the same Arrow
-        batch as the parse — measured 4.3s/1.6M docs cheaper than
-        equivalent JVM expressions appended after the UDF (each is another
-        full pass over the text column)."""
-        parsed = (
-            parse_pages_fused(batch, features=self.cfg.compute_text_features)
-            if self.cfg.fused_parse
-            else parse_pages(batch, features=self.cfg.compute_text_features)
-        )
-        enriched = enrich_pages(
-            parsed, self._host_df(), self._lang_df(),
-            broadcast_host=not self._dims_spilled,
-        )
-        with_rules = route_by(enriched, self._rule, self.cfg.default_sink)
-        return with_rules.withColumns({
-            "sink": F.when(F.col("allowed"), F.col("sink")).otherwise(F.lit(QUARANTINE)),
-            "part_id": F.spark_partition_id(),
-        }).drop("allowed")
-
     def run_batch(self, source: DataFrame) -> BatchResult | None:
         """Process one capped batch above the watermark. Returns None when
         the source is exhausted (the reference's increment==0 signal).
@@ -441,6 +431,8 @@ class Pipeline:
         per-stage job ids go to the `_metrics/batch-<batch_id>.json`
         sidecar (also written, marked exhausted, when nothing was left)."""
         batch_id = self._next_batch_id()
+        # "discover_dims" times the bound job; BatchResult.stages readers
+        # key on the stage names
         with JobGroup(
             self.spark.sparkContext, f"pagelog-{batch_id}", "discover_dims"
         ) as jobs:
@@ -484,7 +476,7 @@ class Pipeline:
             # batch (no learned hot set yet) partitions by pure url hash —
             # uniform by construction.
             host_e = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
-            if self.cfg.detect_hot_hosts and self._hot_hosts:
+            if self._hot_hosts:
                 salt = F.when(
                     host_e.isin(self._hot_hosts),
                     F.pmod(F.xxhash64("url"), F.lit(self.cfg.salt_n)),
@@ -493,41 +485,13 @@ class Pipeline:
             else:
                 batch = batch.repartition(self.cfg.repartition, F.xxhash64("url"))
 
-        # -- dimension discovery (J5). "pre" mode runs an extra pure-JVM
-        # distinct scan BEFORE facts so same-batch facts carry new ids
-        # (strict ProviderInfoCache.cs:126 ordering); "post" mode (default)
-        # discovers from the batch aggregate after the wide pass — zero
-        # extra source scans, ids attach from the next batch on.
-        n_new_hosts = n_new_langs = 0
-        if self.cfg.discovery == "pre":
-            host_expr = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host")
-            if self._dims_spilled:
-                # spilled dims (host set too big for the driver): pre-mode
-                # hosts go through the same bounded table path post mode
-                # uses — the driver never holds a distinct host set at any
-                # corpus size; langs remain a bounded distinct collect
-                # (ISO-code-sized domain, same as the post-mode path).
-                batch_hosts = (
-                    batch.select(host_expr)
-                    .where(F.col("host").isNotNull() & (F.col("host") != ""))
-                    .distinct()
-                )
-                n_new_hosts = self._grow_hosts_table(batch_hosts, batch_id)
-                langs = batch.select("lang").distinct().collect()
-                _, n_new_langs = self._grow_dims(
-                    set(), {r["lang"] for r in langs if r["lang"]}, batch_id
-                )
-            else:
-                pairs = batch.select(host_expr, "lang").distinct().collect()
-                n_new_hosts, n_new_langs = self._grow_dims(
-                    {p["host"] for p in pairs if p["host"]},
-                    {p["lang"] for p in pairs if p["lang"]},
-                    batch_id,
-                )
         lap("parse_route_write")
 
         # -- THE wide pass: parse → enrich → route → partitioned write
-        staged = self._staged(batch)
+        staged = wide_pass(
+            batch, self._host_df(), self._lang_df(), self._rule,
+            self.cfg.default_sink, broadcast_host=not self._dims_spilled,
+        )
         stage_dir = os.path.join(self.wh.root, "_staging", batch_id)
         wm_bound_row = None
         if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
@@ -537,7 +501,7 @@ class Pipeline:
             wm_obs = Observation(f"wm-{batch_id}")
             (staged.observe(wm_obs, max_key().alias("mx"))
              .write.mode("overwrite")
-             .option("compression", self.cfg.staging_codec)
+             .option("compression", _STAGING_CODEC)
              .partitionBy("sink").parquet(stage_dir))
             wm_bound_row = wm_obs.get["mx"]
         lap("observe")
@@ -560,7 +524,6 @@ class Pipeline:
             period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
         ).agg(*_row_stats())
         agg_tbl = self.wh.table("sink_agg")
-        post_discovery = self.cfg.discovery == "post"
 
         # Lineage transport decision: the staged file count is a direct
         # proxy for write tasks x sinks (one data file per task-sink pair),
@@ -653,8 +616,9 @@ class Pipeline:
                     state_update={"last_batch": batch_id, "last_batch_rows": n_rows},
                     # drop_reason is quarantine-only triage data; routed
                     # sink partitions carry it always-null (single
-                    # partitionBy write), so sink tables project it away —
-                    # batch and streaming sink schemas stay identical
+                    # partitionBy write), so sink tables project it away.
+                    # The streaming router writes the same wide_pass rows
+                    # minus drop_reason, so the two sink schemas are equal
                     read_drop=None if s == QUARANTINE else ["drop_reason"],
                 )
             if s != QUARANTINE:
@@ -702,9 +666,10 @@ class Pipeline:
                     meta=meta, state_update=state,
                 )
 
-        # post-mode dimension discovery + hot-host detection from the same
-        # fine grain (no extra scan, and on resume no read-back)
-        if post_discovery and self._dims_spilled:
+        # dimension discovery + hot-host detection from the same fine grain
+        # (no extra scan, and on resume no read-back); new dim keys get
+        # their ids here, so they attach to facts from the NEXT batch on
+        if self._dims_spilled:
             # table path: hosts never touch the driver — hot candidates
             # are filtered to >= threshold (≤ 1/salt_threshold rows by
             # construction) and langs are a bounded distinct
@@ -716,13 +681,12 @@ class Pipeline:
             _, n_new_langs = self._grow_dims(
                 set(), {r["lang"] for r in langs if r["lang"]}, batch_id
             )
-            if self.cfg.detect_hot_hosts:
-                hot = (
-                    fine_grain.groupBy("host").agg(F.sum("n").alias("n"))
-                    .where(F.col("n") >= F.lit(hot_thr)).collect()
-                )
-                self._hot_hosts = sorted(r["host"] for r in hot if r["host"])
-        elif post_discovery:
+            hot = (
+                fine_grain.groupBy("host").agg(F.sum("n").alias("n"))
+                .where(F.col("n") >= F.lit(hot_thr)).collect()
+            )
+            self._hot_hosts = sorted(r["host"] for r in hot if r["host"])
+        else:
             kl = (
                 _rollup(fine, ["host", "lang"], [("n", "sum")]) if fine_grain is None
                 else fine_grain.groupBy("host", "lang").agg(F.sum("n").alias("n")).toArrow()
@@ -732,10 +696,9 @@ class Pipeline:
                 set(pc.unique(kl["lang"]).drop_null().to_pylist()),
                 batch_id,
             )
-            if self.cfg.detect_hot_hosts:
-                hosts = _rollup(kl, ["host"], [("n", "sum")])
-                hosts = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
-                self._hot_hosts = sorted(hosts["host"].drop_null().to_pylist())
+            hosts = _rollup(kl, ["host"], [("n", "sum")])
+            hosts = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
+            self._hot_hosts = sorted(hosts["host"].drop_null().to_pylist())
         if fine_grain is not None:
             fine_grain.unpersist()
 

@@ -14,9 +14,6 @@ Iceberg jars, so this module provides the same contract on plain parquet:
     OpenDbV2.DeleteEvents:1053-1079); compact() is rewrite_data_files /
     VACUUM (S12, OpenDbV2.cs:1086-1097);
   - time travel: read any previous snapshot id.
-
-If a real Iceberg catalog is configured on the session
-(`spark.sql.catalog.*`), prefer it — `use_iceberg()` gates on that.
 """
 
 from __future__ import annotations
@@ -31,16 +28,6 @@ from dataclasses import dataclass
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-
-def use_iceberg(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is actually configured (import-try
-    analog — the sandbox image has no iceberg-spark-runtime jar)."""
-    try:
-        confs = spark.sparkContext.getConf().getAll()
-    except Exception:
-        return False
-    return any(k.startswith("spark.sql.catalog.") and "iceberg" in v.lower() for k, v in confs)
 
 
 @dataclass

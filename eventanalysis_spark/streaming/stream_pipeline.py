@@ -11,9 +11,12 @@ is the `readStream` shape for continuous sources:
   T4 atomic commit  → foreachBatch + warehouse snapshot commit per epoch
   T5 late windows   → withWatermark gating on the windowed aggregate
 
-The transformation graph is IDENTICAL code to the batch path (parse_pages/
-enrich_pages/apply_rules are plain DataFrame fns — they compose into a
-streaming plan unchanged); only source/sink wiring differs.
+The transformation graph is the batch path's own function,
+`pipeline.wide_pass` (mapInPandas parse with text features → enrich →
+route, dropped rows marked QUARANTINE); it composes into a streaming plan
+unchanged. Each epoch writes the non-quarantined rows minus drop_reason,
+so a `stream_sink_<s>` table has the columns of the batch `sink_<s>`.
+Only source/sink wiring differs.
 """
 
 from __future__ import annotations
@@ -24,9 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventanalysis_spark import datagen
-from eventanalysis_spark.operators.enrich import enrich_pages
-from eventanalysis_spark.operators.parse import parse_pages
-from eventanalysis_spark.operators.route import apply_rules
+from eventanalysis_spark.operators.route import rule_lookup
+from eventanalysis_spark.pipeline import QUARANTINE, wide_pass
 from eventanalysis_spark.sources.catalog import Warehouse
 
 PAGES_SCHEMA_DDL = datagen.PAGES_DDL
@@ -41,20 +43,6 @@ def read_pages_stream(
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(path)
-
-
-def transform(
-    stream: DataFrame,
-    host_info: DataFrame,
-    lang_info: DataFrame,
-    rules: DataFrame,
-    default_sink: str = datagen.DEFAULT_SINK,
-) -> DataFrame:
-    """The shared batch/stream transformation graph."""
-    valid = stream.where(F.col("url").isNotNull() & F.col("warc_ts").isNotNull())
-    parsed = parse_pages(valid)
-    enriched = enrich_pages(parsed, host_info, lang_info)
-    return apply_rules(enriched, rules, default_sink)
 
 
 def start_routing_stream(
@@ -73,14 +61,14 @@ def start_routing_stream(
     rules = datagen.route_rules_df(spark)
 
     stream = read_pages_stream(spark, source_path, max_files_per_trigger)
-    routed = transform(stream, host_info, lang_info, rules)
+    routed = wide_pass(stream, host_info, lang_info, rule_lookup(rules))
 
     def sink_batch(df: DataFrame, epoch_id: int) -> None:
         # persist the transformed micro-batch: foreachBatch re-executes the
         # full plan (incl. the parse UDF) for EVERY action otherwise — the
         # sink-discovery collect plus one write per sink would re-parse the
         # epoch n_sinks+1 times at cluster scale
-        df = df.where(F.col("allowed")).drop("allowed", "drop_reason").persist()
+        df = df.where(F.col("sink") != QUARANTINE).drop("drop_reason").persist()
         try:
             sinks = [r["sink"] for r in df.select("sink").distinct().collect()]
             for s in sorted(sinks):

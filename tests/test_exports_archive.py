@@ -227,6 +227,10 @@ def test_streaming_windowed_counts_match_batch(spark, pages, pages_path):
 
 
 def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
+    """The streaming router commits each epoch once (a restart on the same
+    checkpoint adds nothing), and its sinks equal the batch pipeline's:
+    the same columns and the same url set per sink."""
+    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
 
     wh_path = str(tmp_path / "swh")
@@ -249,6 +253,19 @@ def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
         if t.startswith("stream_sink_")
     )
     assert total2 == total
+    # batch/stream parity: one uncapped batch over the same pages
+    pipe = Pipeline(spark, PipelineConfig(warehouse=str(tmp_path / "bwh"), cap=None))
+    r = pipe.run_batch(spark.read.parquet(pages_path))
+    assert sorted(f"stream_sink_{s}" for s in r.sink_counts) == sorted(
+        t for t in wh.tables() if t.startswith("stream_sink_")
+    )
+    for s in r.sink_counts:
+        batch_df = pipe.sink_table(s)
+        stream_df = wh.table(f"stream_sink_{s}").read(spark)
+        assert stream_df.columns == batch_df.columns, s
+        assert {x.url for x in stream_df.select("url").collect()} == {
+            x.url for x in batch_df.select("url").collect()
+        }, s
 
 
 def test_jsonl_roundtrip_sharded(spark, pages, tmp_path):

@@ -15,6 +15,7 @@ from eventanalysis_spark.operators.parse import (
     parse_batch,
     parse_hex_or_dec,
     parse_pages,
+    parse_pages_fused,
 )
 
 
@@ -50,6 +51,18 @@ def test_parse_fields_match_pandas_oracle(spark, pages, pages_pdf):
     assert spark_out["ever"].tolist() == oracle["ever"].astype("int64").tolist()
     assert spark_out["n_tokens"].tolist() == oracle["n_tokens"].astype("int64").tolist()
     assert spark_out["n_bytes"].tolist() == oracle["n_bytes"].astype("int64").tolist()
+
+
+def test_parse_transports_agree(spark, pages):
+    """The two parse transports — the pandas_udf struct column the query
+    paths use and the pipeline's mapInPandas pass — give the same value
+    in every column of parse_pages, row by row (joined on url)."""
+    struct = parse_pages(pages)
+    fused = parse_pages_fused(pages).select(*struct.columns)
+    a = struct.toPandas().sort_values("url").reset_index(drop=True)
+    b = fused.toPandas().sort_values("url").reset_index(drop=True)
+    assert len(a) == len(b) == pages.count() and a["url"].is_unique
+    pd.testing.assert_frame_equal(a, b)
 
 
 def test_title_null_vs_empty(spark, pages):

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
+from eventanalysis_spark.pipeline import Pipeline, PipelineConfig, wide_pass
 
 
 @pytest.fixture()
@@ -204,6 +204,7 @@ def test_dim_spill_switches_to_table_path(spark, pages, wh):
     assert len(hosts) == 20
     ids = sorted(r.host_id for r in hosts)
     assert ids == list(range(1, 21))  # sequential, no gaps across the switch
+    assert p.wh.table("dim_lang").read(spark).count() == 10
     # a new instance resumes spilled and still discovers nothing new
     p2 = Pipeline(spark, cfg)
     assert p2._dims_spilled is True
@@ -330,38 +331,6 @@ def test_lineage_spills_to_table_above_inline_max(spark, pages, wh):
     assert p.wh.table("lineage").read(spark).count() == n_lineage_rows
 
 
-def test_dim_spill_pre_mode_uses_table_path(spark, pages, wh):
-    """discovery='pre' after the dim spill must route host discovery
-    through the table anti-join path like post mode — no unbounded
-    driver collect of (host, lang) pairs remains reachable from any
-    config — with sequential-id continuity and sink parity vs the
-    default post-mode run."""
-    cfg = PipelineConfig(
-        warehouse=wh, cap=1000, dim_cache_limit=5, discovery="pre"
-    )
-    p = Pipeline(spark, cfg)
-    results = p.run_until_exhausted(pages)
-    assert len(results) == 3
-    assert p._dims_spilled is True and p._host_rows is None
-    hosts = p.wh.table("dim_host").read(spark).collect()
-    assert len(hosts) == 20
-    assert sorted(r.host_id for r in hosts) == list(range(1, 21))
-    assert p.wh.table("dim_lang").read(spark).count() == 10
-    # fresh instance resumes spilled; exhausted source stays exhausted
-    p2 = Pipeline(spark, cfg)
-    assert p2._dims_spilled is True
-    assert p2.run_batch(pages) is None
-    # parity with the default post-mode spilled run
-    q = Pipeline(spark, PipelineConfig(
-        warehouse=wh + "_ref", cap=1000, dim_cache_limit=5
-    ))
-    q.run_until_exhausted(pages)
-    for s in ["content", "commerce", "security", "misc"]:
-        a = {x.url for x in p.sink_table(s).select("url").collect()}
-        b = {x.url for x in q.sink_table(s).select("url").collect()}
-        assert a == b, s
-
-
 def test_batch_job_counts_in_sidecar(spark, pages, wh):
     """Each batch's Spark jobs run under the job group pagelog-<batch_id>
     and the sidecar records them per stage: a capped batch runs at most
@@ -420,7 +389,8 @@ def test_enrich_route_plan_has_no_rdd_scan(spark, pages, wh):
     local relations: no Python-RDD scan (which would need Python workers
     to serve a broadcast) anywhere in the enrich/route plan."""
     p = _mk(spark, wh, cap=None)
-    plan = p._staged(pages)._jdf.queryExecution().executedPlan().toString()
+    staged = wide_pass(pages, p._host_df(), p._lang_df(), p._rule)
+    plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
 

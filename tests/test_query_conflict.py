@@ -111,6 +111,48 @@ def test_k_spread_sample_formula(spark, parsed):
     assert one[0].url == pdf.iloc[-1].url
 
 
+_TZ_K_SPREAD = """
+import json
+from pyspark.sql import functions as F
+from eventanalysis_spark.operators.query import k_spread_sample
+from eventanalysis_spark.session import get_spark
+
+spark = get_spark("tz-k-spread", master="local[2]", shuffle_partitions=2,
+                  extra_conf={"spark.driver.memory": "1g"})
+# four rows an hour apart across the 2024-11-03 US fall-back hour
+df = spark.createDataFrame(
+    [(f"http://h/{h}", f"2024-11-03T0{h}:30:00Z") for h in (4, 5, 6, 7)],
+    "url string, ts string",
+).select("url", F.to_timestamp("ts").alias("warc_ts"))
+got = k_spread_sample(df, 4).select(
+    "url", F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("ts")
+)
+print("RESULT " + json.dumps(sorted(tuple(r) for r in got.collect())))
+"""
+
+
+def test_k_spread_sample_is_zone_free(tmp_path):
+    """The sampled rows come back with the timestamps they had: under a
+    driver TZ with a repeated local hour (America/New_York fall-back) no
+    row is shifted. The session zone is UTC, so `ts` is the UTC time."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": "America/New_York",
+           "PYTHONPATH": os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run(
+        [sys.executable, "-c", _TZ_K_SPREAD],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    got = [tuple(r) for r in json.loads(lines[-1][len("RESULT "):])]
+    assert got == [(f"http://h/{h}", f"2024-11-03 0{h}:30:00") for h in (4, 5, 6, 7)]
+
+
 def test_resolve_host_disambiguation():
     rows = [
         {"host_id": 1, "host": "pages.hothost-alpha.com"},

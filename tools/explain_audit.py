@@ -79,7 +79,7 @@ def main() -> None:
         "The pipeline's batch is fully filtered before parsing, so the "
         "mapInPandas pushdown barrier costs nothing; passthrough columns "
         "ride the Arrow batch instead of a JVM-side struct zip "
-        "(~5-8% faster, tools/ab_parse_udf.py).",
+        "(measured ~5-8% faster).",
     )
 
     # 2. enrich + route: broadcast-only joins
