@@ -34,10 +34,12 @@ Scale design (100 TB / 1000 executors):
   - the enrich joins are broadcast (dims are KBs—MBs, held on the driver
     as local relations, so no Python worker serves them) and routing is a
     literal map lookup; the fact side never shuffles for either;
-  - the batch is repartitioned by xxhash64(url) — uniform by construction
-    (the north rule's hashed-url partitioning); host-keyed aggregates use
-    explicit hot-host salting (operators/skew.py) on top of map-side
-    partial aggregation;
+  - a capped batch runs one wide-pass task per ROWS_PER_TASK rows
+    (coalesced, no shuffle), since each task has a fixed Python-worker and
+    writer cost; with `repartition` set, the batch is instead repartitioned
+    by xxhash64(url) — uniform by construction (the north rule's
+    hashed-url partitioning) — with explicit hot-host salting
+    (operators/skew.py) on top of map-side partial aggregation;
   - resume: the watermark commits atomically with data; re-running a
     half-committed batch skips sinks that already recorded the batch_id
     (idempotent), then advances — crash-safe exactly-once overall.
@@ -66,6 +68,7 @@ from eventanalysis_spark.operators.parse import parse_pages_fused
 from eventanalysis_spark.operators.route import route_by, rule_lookup
 from eventanalysis_spark.sources.catalog import Warehouse
 from eventanalysis_spark.sources.incremental import (
+    ROWS_PER_TASK,
     Watermark,
     advance,
     max_key,
@@ -235,7 +238,10 @@ class PipelineConfig:
     # observation grain) and each sink commit carries a
     # {"lineage_ref": ...} pointer.
     lineage_inline_max: int = 4096
-    repartition: int | None = None  # xxhash64(url) partitions; None = leave as scanned
+    # xxhash64(url) partitions of every batch. None: a capped batch runs
+    # ceil(rows / incremental.ROWS_PER_TASK) tasks (at most the scan's
+    # partitions), an uncapped one runs as scanned
+    repartition: int | None = None
 
 
 @dataclass
@@ -327,6 +333,14 @@ class Pipeline:
 
     def _lang_df(self) -> DataFrame:
         return _local_df(self.spark, self._lang_rows, _LANG_SCHEMA)
+
+    def routed(self, pages: DataFrame) -> DataFrame:
+        """`wide_pass` over `pages` with this warehouse's current dims,
+        validated rules and default sink."""
+        return wide_pass(
+            pages, self._host_df(), self._lang_df(), self._rule,
+            self.cfg.default_sink, broadcast_host=not self._dims_spilled,
+        )
 
     def _grow_dims(self, seen_hosts: set, seen_langs: set, batch_id: str) -> tuple[int, int]:
         """Deterministic sequential id assignment for newly observed keys
@@ -463,7 +477,12 @@ class Pipeline:
         valid_source = source.where(
             F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
         )
-        batch = next_batch(valid_source, wm, self.cfg.cap)
+        # a capped batch runs one wide-pass task per ROWS_PER_TASK rows,
+        # unless it is repartitioned below (no coalesce ahead of a shuffle)
+        batch = next_batch(
+            valid_source, wm, self.cfg.cap,
+            rows_per_task=None if self.cfg.repartition else ROWS_PER_TASK,
+        )
         if batch is None:  # capped bound found nothing above the watermark
             exhausted()
             return None
@@ -488,10 +507,7 @@ class Pipeline:
         lap("parse_route_write")
 
         # -- THE wide pass: parse → enrich → route → partitioned write
-        staged = wide_pass(
-            batch, self._host_df(), self._lang_df(), self._rule,
-            self.cfg.default_sink, broadcast_host=not self._dims_spilled,
-        )
+        staged = self.routed(batch)
         stage_dir = os.path.join(self.wh.root, "_staging", batch_id)
         wm_bound_row = None
         if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):

@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (local[32], 128 GiB); on a real
-cluster the same builder is driven by spark-submit conf instead. UTC
+Local-mode defaults fit the host: one task slot per core this process
+may run on and a driver heap of a quarter of physical RAM (1-48 GB),
+overridable with SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM; on a real cluster
+the same builder is driven by spark-submit conf instead. UTC
 session timezone is pinned so period keys (day / ISO-week / month) and
 the DuckDB oracle agree byte-for-byte.
 """
@@ -11,6 +13,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def host_defaults() -> tuple[str, str]:
+    """(local-mode cores, driver heap) for this host, unless
+    SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override them."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    mem = os.environ.get("SPARK_DRIVER_MEM") or f"{min(48, max(1, ram_gb // 4))}g"
+    return cpus, mem
 
 
 def get_spark(
@@ -25,7 +36,7 @@ def get_spark(
     two parallelism levels (the in-sandbox stand-in for N vs 4N
     executors, per BASELINE.md).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_defaults()
     master = master or f"local[{cpus}]"
     # Shuffle partitions ~ cores in local mode; on a cluster AQE coalesces.
     if shuffle_partitions is None:
@@ -49,7 +60,7 @@ def get_spark(
         # raising the record cap is safe at both extremes.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # generated-class cache (default 100 entries): a driver running

@@ -13,7 +13,8 @@ is the `readStream` shape for continuous sources:
 
 The transformation graph is the batch path's own function,
 `pipeline.wide_pass` (mapInPandas parse with text features → enrich →
-route, dropped rows marked QUARANTINE); it composes into a streaming plan
+route, dropped rows marked QUARANTINE), with the target warehouse's dims
+and rules through `Pipeline.routed`; it composes into a streaming plan
 unchanged. Each epoch writes the non-quarantined rows minus drop_reason,
 so a `stream_sink_<s>` table has the columns of the batch `sink_<s>`.
 Only source/sink wiring differs.
@@ -27,9 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventanalysis_spark import datagen
-from eventanalysis_spark.operators.route import rule_lookup
-from eventanalysis_spark.pipeline import QUARANTINE, wide_pass
-from eventanalysis_spark.sources.catalog import Warehouse
+from eventanalysis_spark.pipeline import QUARANTINE, Pipeline, PipelineConfig
 
 PAGES_SCHEMA_DDL = datagen.PAGES_DDL
 
@@ -54,14 +53,14 @@ def start_routing_stream(
     max_files_per_trigger: int | None = None,
 ):
     """foreachBatch router: each epoch commits one snapshot per sink —
-    exactly-once via (epoch_id dedup in table state) + checkpoint offsets."""
-    wh = Warehouse(warehouse)
-    host_info = datagen.host_info_df(spark)
-    lang_info = datagen.lang_info_df(spark)
-    rules = datagen.route_rules_df(spark)
+    exactly-once via (epoch_id dedup in table state) + checkpoint offsets.
 
-    stream = read_pages_stream(spark, source_path, max_files_per_trigger)
-    routed = wide_pass(stream, host_info, lang_info, rule_lookup(rules))
+    Enriches and routes with the target warehouse's dim_host, dim_lang
+    and route_rules as of the stream's start, validated by the batch
+    `Pipeline` (which bootstraps them in a fresh warehouse)."""
+    pipe = Pipeline(spark, PipelineConfig(warehouse=warehouse))
+    wh = pipe.wh
+    routed = pipe.routed(read_pages_stream(spark, source_path, max_files_per_trigger))
 
     def sink_batch(df: DataFrame, epoch_id: int) -> None:
         # persist the transformed micro-batch: foreachBatch re-executes the

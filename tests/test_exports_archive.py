@@ -268,6 +268,42 @@ def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
         }, s
 
 
+def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_path):
+    """A stream into a warehouse bootstrapped with its own rules and dims
+    routes and enriches like that warehouse's batch pipeline: a custom
+    rule (article → sink news) and a custom registrar reach the stream's
+    sink, with the batch sink's columns, urls and registrars."""
+    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
+    from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
+
+    wh_path = str(tmp_path / "wh")
+    rules = spark.createDataFrame(
+        [("article", 0, True, "news"), ("login", 0, False, "security")],
+        "event_class string, min_version int, enabled boolean, sink string",
+    )
+    hosts = spark.createDataFrame(
+        [(i, h, "custom-registrar") for i, h, _ in datagen.host_info_rows()],
+        "host_id int, host string, registrar string",
+    )
+    pipe = Pipeline(
+        spark, PipelineConfig(warehouse=wh_path, cap=None), host_info=hosts, rules=rules
+    )
+    assert pipe.run_batch(spark.read.parquet(pages_path)).sink_counts["news"] > 0
+    start_routing_stream(spark, pages_path, wh_path, str(tmp_path / "ckpt")).awaitTermination()
+    batch_df = pipe.sink_table("news")
+    stream_df = Warehouse(wh_path).table("stream_sink_news").read(spark)
+    assert stream_df.columns == batch_df.columns
+
+    def rows(df):
+        return {(x.url, x.registrar) for x in df.select("url", "registrar").collect()}
+
+    assert rows(stream_df) == rows(batch_df)
+    # hosts missing from the dim table enrich to null
+    registrars = {x.registrar for x in batch_df.select("registrar").distinct().collect()}
+    assert "custom-registrar" in registrars
+    assert registrars <= {"custom-registrar", None}
+
+
 def test_jsonl_roundtrip_sharded(spark, pages, tmp_path):
     from eventanalysis_spark.sources.exports import export_jsonl, read_jsonl
 

@@ -3,6 +3,7 @@ idempotent partial-failure recovery, observation semantics, lineage."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -265,6 +266,23 @@ def test_hot_host_salting_learns_and_spreads(spark, pages, wh):
     # learned hot set is committed with the watermark and survives resume
     p2 = Pipeline(spark, cfg)
     assert p2._hot_hosts == pipe._hot_hosts
+
+
+@pytest.mark.parametrize("repartition, n_tasks", [(None, 1), (4, 4)])
+def test_capped_batch_tasks_sized_by_rows(spark, pages, wh, repartition, n_tasks):
+    """A capped batch below ROWS_PER_TASK rows stages one write task (one
+    part_id, one file per sink dir), however many files the source has;
+    an explicit repartition still sets the task count."""
+    assert pages.rdd.getNumPartitions() > 1
+    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=1500, repartition=repartition))
+    r = p.run_batch(pages)
+    stage_dir = os.path.join(wh, "_staging", r.batch_id)
+    stg = spark.read.parquet(stage_dir)
+    assert stg.select("part_id").distinct().count() == n_tasks
+    sink_dirs = [d for d in os.listdir(stage_dir) if d.startswith("sink=")]
+    assert len(sink_dirs) == 5
+    for d in sink_dirs:
+        assert len(glob.glob(os.path.join(stage_dir, d, "*.parquet"))) == n_tasks, d
 
 
 def test_warehouse_maintain_compacts_and_preserves(spark, pages, tmp_path):

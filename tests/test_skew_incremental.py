@@ -13,6 +13,7 @@ from eventanalysis_spark.operators.skew import (
     salted_repartition,
 )
 from eventanalysis_spark.sources.incremental import (
+    ROWS_PER_TASK,
     Watermark,
     advance,
     above_watermark,
@@ -109,3 +110,20 @@ def test_capped_batches_advance_through_ties(spark):
         wm = advance(batch_bounds(b), wm)
     assert seen == sorted(seen)
     assert len(seen) == 10  # every tie eventually consumed exactly once
+
+
+def test_next_batch_sizes_tasks_by_rows(pages):
+    """A capped batch is coalesced to ceil(rows / rows_per_task)
+    partitions, never more than the scan gives; rows_per_task=None and
+    uncapped batches keep the scan's partitioning."""
+    scanned = pages.rdd.getNumPartitions()
+    assert scanned > 3
+
+    def n_parts(cap, rows_per_task=ROWS_PER_TASK):
+        return next_batch(pages, Watermark(), cap, rows_per_task).rdd.getNumPartitions()
+
+    assert n_parts(2500) == 1
+    assert n_parts(2500, rows_per_task=1000) == 3
+    assert n_parts(2500, rows_per_task=1) == scanned
+    assert n_parts(2500, rows_per_task=None) == scanned
+    assert n_parts(None) == scanned
