@@ -29,14 +29,17 @@ Scale design (100 TB / 1000 executors):
     observations, dim discovery, hot hosts and the per-sink aggregate
     are pyarrow roll-ups committed from the driver (no Spark job);
     past either ceiling the same roll-ups stay distributed;
-  - a capped batch is a bound job, the write job and the stats collect;
+  - a capped batch is a bound job, the shuffle of its selected rows, the
+    write job and the stats collect;
     a call that finds the source exhausted runs only the bound job;
   - the enrich joins are broadcast (dims are KBs—MBs, held on the driver
     as local relations, so no Python worker serves them) and routing is a
     literal map lookup; the fact side never shuffles for either;
-  - a capped batch runs one wide-pass task per ROWS_PER_TASK rows
-    (coalesced, no shuffle), since each task has a fixed Python-worker and
-    writer cost; with `repartition` set, the batch is instead repartitioned
+  - a capped batch runs one wide-pass task per ROWS_PER_TASK rows (a
+    round-robin shuffle of the selected rows; the scan stays parallel),
+    since each task has a fixed Python-worker and writer cost; a batch one
+    task wrote is stats-scanned in one task with no shuffle; with
+    `repartition` set, the batch is instead repartitioned
     by xxhash64(url) — uniform by construction (the north rule's
     hashed-url partitioning) — with explicit hot-host salting
     (operators/skew.py) on top of map-side partial aggregation;
@@ -68,7 +71,6 @@ from eventanalysis_spark.operators.parse import parse_pages_fused
 from eventanalysis_spark.operators.route import route_by, rule_lookup
 from eventanalysis_spark.sources.catalog import Warehouse
 from eventanalysis_spark.sources.incremental import (
-    ROWS_PER_TASK,
     Watermark,
     advance,
     max_key,
@@ -239,8 +241,8 @@ class PipelineConfig:
     # {"lineage_ref": ...} pointer.
     lineage_inline_max: int = 4096
     # xxhash64(url) partitions of every batch. None: a capped batch runs
-    # ceil(rows / incremental.ROWS_PER_TASK) tasks (at most the scan's
-    # partitions), an uncapped one runs as scanned
+    # ceil(rows / incremental.ROWS_PER_TASK) tasks, an uncapped one runs
+    # as scanned
     repartition: int | None = None
 
 
@@ -477,12 +479,7 @@ class Pipeline:
         valid_source = source.where(
             F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
         )
-        # a capped batch runs one wide-pass task per ROWS_PER_TASK rows,
-        # unless it is repartitioned below (no coalesce ahead of a shuffle)
-        batch = next_batch(
-            valid_source, wm, self.cfg.cap,
-            rows_per_task=None if self.cfg.repartition else ROWS_PER_TASK,
-        )
+        batch = next_batch(valid_source, wm, self.cfg.cap)
         if batch is None:  # capped bound found nothing above the watermark
             exhausted()
             return None
@@ -523,34 +520,41 @@ class Pipeline:
         lap("observe")
 
         # exhausted uncapped source → the partitioned write produced no sink dirs
-        if not any(d.startswith("sink=") for d in os.listdir(stage_dir)):
+        sink_dirs = [d for d in os.listdir(stage_dir) if d.startswith("sink=")]
+        if not sink_dirs:
             shutil.rmtree(stage_dir, ignore_errors=True)
             exhausted()
             return None
-
-        # -- all stats from ONE staged scan: a map-side-partial hash
-        # aggregate at (sink, part_id, event_class, host, lang, bucket)
-        # grain. part_id is in the grain, so the map-side combine is
-        # perfect (each write task owns one part_id) and the shuffled
-        # volume is the per-task distinct-combo count, not rows. The staged
-        # dir is read with the wide pass's own schema (no inference job).
-        stg = self.spark.read.schema(staged.schema).parquet(stage_dir)
-        fine_grain = stg.groupBy(
-            *_FINE_KEYS,
-            period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
-        ).agg(*_row_stats())
-        agg_tbl = self.wh.table("sink_agg")
-
-        # Lineage transport decision: the staged file count is a direct
-        # proxy for write tasks x sinks (one data file per task-sink pair),
-        # known from a pure driver-side listing. Above the inline ceiling
-        # the driver must never hold per-partition rows.
+        # the staged file count is a direct proxy for write tasks x sinks
+        # (one data file per task-sink pair), known from a pure driver-side
+        # listing
         n_staged_files = sum(
             1
             for _r, _d, _fs in os.walk(stage_dir)
             for f in _fs
             if f.endswith(".parquet")
         )
+
+        # -- all stats from ONE staged scan: a map-side-partial hash
+        # aggregate at (sink, part_id, event_class, host, lang, bucket)
+        # grain. part_id is in the grain, so the map-side combine is
+        # perfect (each write task owns one part_id) and the shuffled
+        # volume is the per-task distinct-combo count, not rows. A batch
+        # one task wrote (one file per sink dir) is scanned in one task
+        # too, and its aggregate then needs no shuffle and no job of its
+        # own. The staged dir is read with the wide pass's own schema (no
+        # inference job).
+        stg = self.spark.read.schema(staged.schema).parquet(stage_dir)
+        if n_staged_files == len(sink_dirs):
+            stg = stg.coalesce(1)
+        fine_grain = stg.groupBy(
+            *_FINE_KEYS,
+            period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
+        ).agg(*_row_stats())
+        agg_tbl = self.wh.table("sink_agg")
+
+        # Lineage transport decision: above the inline ceiling the driver
+        # must never hold per-partition rows.
         spill_lineage = n_staged_files > self.cfg.lineage_inline_max
         if not (spill_lineage or self._dims_spilled):
             # driver path: the fine grain (10^3-10^4 rows per batch while

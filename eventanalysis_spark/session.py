@@ -1,11 +1,12 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode defaults fit the host: one task slot per core this process
-may run on and a driver heap of a quarter of physical RAM (1-48 GB),
-overridable with SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM; on a real cluster
-the same builder is driven by spark-submit conf instead. UTC
-session timezone is pinned so period keys (day / ISO-week / month) and
-the DuckDB oracle agree byte-for-byte.
+may run on and a driver heap of a quarter of its usable RAM (1-48 GB),
+both lowered to the container's cgroup CPU quota and memory limit when
+one is set, and overridable with SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM; on
+a real cluster the same builder is driven by spark-submit conf instead.
+UTC session timezone is pinned so period keys (day / ISO-week / month)
+and the DuckDB oracle agree byte-for-byte.
 """
 
 from __future__ import annotations
@@ -14,12 +15,53 @@ import os
 
 from pyspark.sql import SparkSession
 
+# cgroup mount as a container sees its own group (v2 unified, or the v1
+# per-controller dirs)
+CGROUP_ROOT = "/sys/fs/cgroup"
+
+
+def _cgroup_value(*names: str) -> list[str] | None:
+    """Fields of the first of the cgroup interface files `names` that
+    exists, None when none does."""
+    for name in names:
+        try:
+            with open(os.path.join(CGROUP_ROOT, name)) as f:
+                return f.read().split()
+        except OSError:
+            continue
+    return None
+
+
+def usable_cpus() -> int:
+    """Cores this process may run on (its CPU affinity; os.cpu_count()
+    where the OS has no affinity call), lowered to a cgroup CPU quota."""
+    if hasattr(os, "sched_getaffinity"):
+        n = len(os.sched_getaffinity(0))
+    else:
+        n = os.cpu_count() or 1
+    quota = _cgroup_value("cpu.max")  # v2: "<quota> <period>" or "max ..."
+    if quota is None:  # v1: quota -1 = none
+        q, p = _cgroup_value("cpu/cpu.cfs_quota_us"), _cgroup_value("cpu/cpu.cfs_period_us")
+        quota = q + p if q and p else None
+    if quota and quota[0] not in ("max", "-1"):
+        n = min(n, max(1, -(-int(quota[0]) // int(quota[1]))))
+    return n
+
+
+def usable_ram() -> int:
+    """Physical RAM in bytes, lowered to a cgroup memory limit."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit = _cgroup_value("memory.max", "memory/memory.limit_in_bytes")
+    if limit and limit[0] != "max":
+        ram = min(ram, int(limit[0]))
+    return ram
+
 
 def host_defaults() -> tuple[str, str]:
     """(local-mode cores, driver heap) for this host, unless
     SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override them."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(usable_cpus())
+    ram_gb = usable_ram() >> 30
     mem = os.environ.get("SPARK_DRIVER_MEM") or f"{min(48, max(1, ram_gb // 4))}g"
     return cpus, mem
 

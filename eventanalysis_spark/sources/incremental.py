@@ -75,17 +75,11 @@ def max_key() -> Column:
 # task opens one staged writer per sink. Measured on a 4-core host, that
 # fixed cost is about 0.2-0.3 s per task against about 0.09 ms of parse per
 # doc, so a task breaks even at 2-3k rows; 4096 is the power of two above
-# that (cap 2000 → 1 task; cap 20000 → 5, or as many as the scan gives
-# when that is fewer).
+# that (cap 2000 → 1 task; cap 20000 → 5).
 ROWS_PER_TASK = 4096
 
 
-def next_batch(
-    df: DataFrame,
-    wm: Watermark,
-    cap: int | None = 20000,
-    rows_per_task: int | None = ROWS_PER_TASK,
-) -> DataFrame | None:
+def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFrame | None:
     """One bounded micro-batch in watermark order, or None when nothing is
     left above the watermark (capped calls only: cap=None → everything
     above the watermark, possibly empty, with no job run here, partitioned
@@ -102,10 +96,12 @@ def next_batch(
     PARALLEL filter against that bound. The selected row set is
     identical (url is unique within a timestamp, so the bound cuts
     exactly at the cap-th row). Runs one small Spark job, which also
-    counts the batch's n rows: the batch is coalesced (no shuffle) to
-    ceil(n / rows_per_task) partitions, never more than the scan gives.
-    rows_per_task=None keeps the scan's partitioning, for a caller that
-    repartitions the batch itself."""
+    counts the batch's n rows. The selected rows are then round-robin
+    shuffled into ceil(n / ROWS_PER_TASK) partitions: the scan and the
+    filter keep one task per scan partition, and only the <= cap selected
+    rows cross the shuffle (a coalesce would merge the scan itself into
+    those few tasks). A caller that repartitions the batch by expression
+    replaces this shuffle (Spark's CollapseRepartition drops it)."""
     inc = above_watermark(df, wm)
     if cap is None:
         return inc
@@ -125,9 +121,7 @@ def next_batch(
         (F.col("warc_ts") < b_ts)
         | ((F.col("warc_ts") == b_ts) & (F.col("url") <= b_url))
     )
-    if rows_per_task is None:
-        return batch
-    return batch.coalesce(-(-row["n"] // rows_per_task))
+    return batch.repartition(-(-row["n"] // ROWS_PER_TASK))
 
 
 def advance(batch_max: tuple | None, wm: Watermark) -> Watermark:

@@ -51,14 +51,17 @@ def start_routing_stream(
     checkpoint: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
+    default_sink: str = datagen.DEFAULT_SINK,
 ):
     """foreachBatch router: each epoch commits one snapshot per sink —
     exactly-once via (epoch_id dedup in table state) + checkpoint offsets.
 
     Enriches and routes with the target warehouse's dim_host, dim_lang
     and route_rules as of the stream's start, validated by the batch
-    `Pipeline` (which bootstraps them in a fresh warehouse)."""
-    pipe = Pipeline(spark, PipelineConfig(warehouse=warehouse))
+    `Pipeline` (which bootstraps them in a fresh warehouse). Classes
+    without a rule go to `default_sink`, which the warehouse does not
+    store: pass the batch pipeline's `PipelineConfig.default_sink`."""
+    pipe = Pipeline(spark, PipelineConfig(warehouse=warehouse, default_sink=default_sink))
     wh = pipe.wh
     routed = pipe.routed(read_pages_stream(spark, source_path, max_files_per_trigger))
 

@@ -271,8 +271,9 @@ def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
 def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_path):
     """A stream into a warehouse bootstrapped with its own rules and dims
     routes and enriches like that warehouse's batch pipeline: a custom
-    rule (article → sink news) and a custom registrar reach the stream's
-    sink, with the batch sink's columns, urls and registrars."""
+    rule (article → sink news), a custom registrar and the batch's
+    default sink reach the stream's sinks, with the batch sinks' columns,
+    urls and registrars."""
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
 
@@ -286,19 +287,25 @@ def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_p
         "host_id int, host string, registrar string",
     )
     pipe = Pipeline(
-        spark, PipelineConfig(warehouse=wh_path, cap=None), host_info=hosts, rules=rules
+        spark, PipelineConfig(warehouse=wh_path, cap=None, default_sink="other"),
+        host_info=hosts, rules=rules,
     )
-    assert pipe.run_batch(spark.read.parquet(pages_path)).sink_counts["news"] > 0
-    start_routing_stream(spark, pages_path, wh_path, str(tmp_path / "ckpt")).awaitTermination()
-    batch_df = pipe.sink_table("news")
-    stream_df = Warehouse(wh_path).table("stream_sink_news").read(spark)
-    assert stream_df.columns == batch_df.columns
+    counts = pipe.run_batch(spark.read.parquet(pages_path)).sink_counts
+    assert counts["news"] > 0 and counts["other"] > 0
+    start_routing_stream(
+        spark, pages_path, wh_path, str(tmp_path / "ckpt"), default_sink="other"
+    ).awaitTermination()
 
     def rows(df):
         return {(x.url, x.registrar) for x in df.select("url", "registrar").collect()}
 
-    assert rows(stream_df) == rows(batch_df)
+    for sink in ("news", "other"):
+        batch_df = pipe.sink_table(sink)
+        stream_df = Warehouse(wh_path).table(f"stream_sink_{sink}").read(spark)
+        assert stream_df.columns == batch_df.columns
+        assert rows(stream_df) == rows(batch_df), sink
     # hosts missing from the dim table enrich to null
+    batch_df = pipe.sink_table("news")
     registrars = {x.registrar for x in batch_df.select("registrar").distinct().collect()}
     assert "custom-registrar" in registrars
     assert registrars <= {"custom-registrar", None}

@@ -12,8 +12,8 @@ from eventanalysis_spark.operators.skew import (
     salted_agg,
     salted_repartition,
 )
+from eventanalysis_spark.sources import incremental
 from eventanalysis_spark.sources.incremental import (
-    ROWS_PER_TASK,
     Watermark,
     advance,
     above_watermark,
@@ -112,18 +112,21 @@ def test_capped_batches_advance_through_ties(spark):
     assert len(seen) == 10  # every tie eventually consumed exactly once
 
 
-def test_next_batch_sizes_tasks_by_rows(pages):
-    """A capped batch is coalesced to ceil(rows / rows_per_task)
-    partitions, never more than the scan gives; rows_per_task=None and
-    uncapped batches keep the scan's partitioning."""
+def test_next_batch_sizes_tasks_by_rows(pages, monkeypatch):
+    """A capped batch runs ceil(rows / ROWS_PER_TASK) tasks after a
+    round-robin shuffle of its selected rows: the scan and the bound
+    filter keep one task per scan partition (no coalesce merges them).
+    Uncapped batches keep the scan's partitioning."""
     scanned = pages.rdd.getNumPartitions()
     assert scanned > 3
 
-    def n_parts(cap, rows_per_task=ROWS_PER_TASK):
-        return next_batch(pages, Watermark(), cap, rows_per_task).rdd.getNumPartitions()
+    def batch(cap):
+        return next_batch(pages, Watermark(), cap)
 
-    assert n_parts(2500) == 1
-    assert n_parts(2500, rows_per_task=1000) == 3
-    assert n_parts(2500, rows_per_task=1) == scanned
-    assert n_parts(2500, rows_per_task=None) == scanned
-    assert n_parts(None) == scanned
+    assert batch(2500).rdd.getNumPartitions() == 1
+    plan = batch(2500)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan
+    assert "Coalesce" not in plan
+    monkeypatch.setattr(incremental, "ROWS_PER_TASK", 1000)
+    assert batch(2500).rdd.getNumPartitions() == 3
+    assert batch(None).rdd.getNumPartitions() == scanned
