@@ -15,6 +15,11 @@ fact side to `select(key).distinct()` FIRST (map-side partial agg), so the
 anti-join runs on the tiny distinct set, not the fact table. The
 reference's lazy description loader (TaskInfoCache.Observe:65-79) becomes
 "enrich only the new-keys output", same asymptotics.
+
+Growing the dims is the pipeline's (pipeline.py): while they fit the
+driver cache it numbers new keys on the driver; past it, new hosts come
+from `discover_new_keys` against the dim table and get their ids from
+`assign_ids`. Batches and stream epochs grow them the same way.
 """
 
 from __future__ import annotations
@@ -68,11 +73,10 @@ def assign_ids(
     id_col: str,
     order_cols: list[str],
     start_after: int = 0,
-    mode: str = "sequential",
 ) -> DataFrame:
     """Deterministic id assignment for discovered keys.
 
-    mode='sequential' reproduces the reference's next-id counter
+    Reproduces the reference's next-id counter
     (ProviderInfoCache.cs:126) deterministically: ids are the global rank
     over a total order on the key, offset by the current max id — computed
     two-phase so no single partition ever sees the whole key set (batch 1
@@ -81,13 +85,7 @@ def assign_ids(
     (one ~numPartitions-row window), broadcast offsets back, and
     row_number only WITHIN each range partition. Global-rank ids are
     invariant to where the sampled range bounds land, so the result is
-    identical to a global row_number.
-
-    mode='hash' assigns xxhash64(key) — fully parallel, stable across runs
-    and cluster sizes, but diverges from sequential numbering (documented
-    deviation, SURVEY.md §7.3)."""
-    if mode == "hash":
-        return new_keys.withColumn(id_col, F.xxhash64(*order_cols))
+    identical to a global row_number."""
     cols = [F.col(c) for c in order_cols]
     npart = new_keys.sparkSession.sparkContext.defaultParallelism
     from eventanalysis_spark.operators.ranks import ranged_with_pid
@@ -109,26 +107,3 @@ def assign_ids(
         )
         .drop("_pid", "_off")
     )
-
-
-def grow_dim(dim: DataFrame, new_keys_with_ids: DataFrame) -> DataFrame:
-    """Union discovered keys into the dim (commit-time flush analog,
-    EventImportJob2.cs:46-59). Missing attribute columns become NULL
-    (= 'unknown', per the Design-v2 contract)."""
-    return dim.unionByName(new_keys_with_ids, allowMissingColumns=True)
-
-
-def discover_and_grow(
-    fact: DataFrame,
-    dim: DataFrame,
-    keys: list[str],
-    id_col: str | None = None,
-    mode: str = "sequential",
-) -> tuple[DataFrame, DataFrame]:
-    """One-shot: returns (new_keys_with_ids, grown_dim)."""
-    new = discover_new_keys(fact, dim, keys)
-    if id_col is not None:
-        row = dim.agg(F.max(F.col(id_col)).alias("m")).collect()[0]
-        start = row["m"] if row["m"] is not None else 0
-        new = assign_ids(new, id_col, keys, start_after=start, mode=mode)
-    return new, grow_dim(dim, new)

@@ -8,10 +8,12 @@ Parity targets:
   - the event-job registry (JobRegistry.cs:52-68) becomes the rules table's
     sink column: one parse pass fans out to N sinks.
 
-Spark-first: the rule table is tiny → a literal map lookup, so routing adds
-no join, no shuffle and no broadcast; the router returns ONE DataFrame
-with (sink, allowed) columns, and the pipeline writes every sink from that
-single pass with one partitionBy(sink) write (pipeline.py).
+Spark-first: the rule table is tiny → a literal map lookup
+(`rule_lookup`), so routing adds no join, no shuffle and no broadcast;
+`route_by` returns ONE DataFrame with (sink, allowed, drop_reason)
+columns, and the pipeline writes every sink from that single pass with
+one partitionBy(sink) write and rolls the per-class observations,
+dropped rows included, up from the staged data (pipeline.py).
 """
 
 from __future__ import annotations
@@ -84,36 +86,3 @@ def route_by(
         .otherwise(F.lit("min_version")),
         "sink": F.coalesce(rule["sink"], F.lit(default_sink)),
     })
-
-
-def apply_rules(
-    enriched: DataFrame,
-    rules: DataFrame,
-    default_sink: str = DEFAULT_SINK,
-    class_col: str = "event_class",
-    version_col: str = "ever",
-) -> DataFrame:
-    """Look up each row's rule in `rules` and compute the routing columns
-    (`rule_lookup` + `route_by`)."""
-    return route_by(enriched, rule_lookup(rules, class_col), default_sink, version_col)
-
-
-def routed_only(with_rules: DataFrame) -> DataFrame:
-    """The rows that actually flow to sinks (post-filter; drop_reason is
-    null by construction on allowed rows, so it is dropped too)."""
-    return with_rules.where(F.col("allowed")).drop("allowed", "drop_reason")
-
-
-def observation_counts(with_rules: DataFrame, class_col: str = "event_class") -> DataFrame:
-    """The 'observe even ignored events' aggregate: per-class totals
-    including dropped rows (EventInfoTracker observation semantics)."""
-    return (
-        with_rules.groupBy(class_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_observed"),
-            F.sum(F.col("allowed").cast("long")).alias("n_routed"),
-            F.sum((~F.col("allowed")).cast("long")).alias("n_dropped"),
-        )
-        .orderBy(class_col)
-    )
-

@@ -18,6 +18,8 @@ reference's ingest lifecycle (SURVEY.md §3.1):
   buffered insert + txn commit            per-sink snapshot append (atomic manifest)
   tag files (db-updated, last rid)        commit metadata + _metrics sidecars
   -cap 20000 / -repeat loop               bounded batches / run_until_exhausted
+                                          (a stream epoch commits through the
+                                          same path: run_epoch)
 
 Scale design (100 TB / 1000 executors):
   - ONE wide pass over the batch: parse runs once and streams directly
@@ -169,6 +171,13 @@ def _local_df(spark: SparkSession, rows: list[dict], schema: StructType) -> Data
     Arrow, not from Python tuples, so it is no Python RDD: broadcasting it
     needs no Python worker."""
     return spark.createDataFrame(_arrow_rows(rows, schema), schema)
+
+
+def _keyed(pages: DataFrame) -> DataFrame:
+    """The rows a batch or epoch ingests: a null url or warc_ts has no
+    place in the watermark order (and, sorting first under ASC NULLS
+    FIRST, would wedge a capped drain)."""
+    return pages.where(F.col("url").isNotNull() & F.col("warc_ts").isNotNull())
 
 
 def wide_pass(
@@ -336,14 +345,6 @@ class Pipeline:
     def _lang_df(self) -> DataFrame:
         return _local_df(self.spark, self._lang_rows, _LANG_SCHEMA)
 
-    def routed(self, pages: DataFrame) -> DataFrame:
-        """`wide_pass` over `pages` with this warehouse's current dims,
-        validated rules and default sink."""
-        return wide_pass(
-            pages, self._host_df(), self._lang_df(), self._rule,
-            self.cfg.default_sink, broadcast_host=not self._dims_spilled,
-        )
-
     def _grow_dims(self, seen_hosts: set, seen_langs: set, batch_id: str) -> tuple[int, int]:
         """Deterministic sequential id assignment for newly observed keys
         (driver-side over the tiny new-key set; the reference does exactly
@@ -452,59 +453,84 @@ class Pipeline:
         with JobGroup(
             self.spark.sparkContext, f"pagelog-{batch_id}", "discover_dims"
         ) as jobs:
-            return self._run_batch(source, batch_id, jobs)
+            timer = StageTimer()
+            wm = self.watermark()
+            batch = next_batch(_keyed(source), wm, self.cfg.cap)
+            if batch is None:  # capped bound found nothing above the watermark
+                return self._exhausted(batch_id, timer, jobs)
+            if self.cfg.repartition:
+                # Explicit batch partitioning (the north rule's hashed-url +
+                # hot-host salting). Host-keyed partitioning co-locates each
+                # host's pages; hosts the PREVIOUS batch's aggregate showed
+                # above salt_threshold of batch volume get a url-hash salt in
+                # [0, salt_n) so no single reducer owns a hot host. First
+                # batch (no learned hot set yet) partitions by pure url hash —
+                # uniform by construction.
+                host_e = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
+                if self._hot_hosts:
+                    salt = F.when(
+                        host_e.isin(self._hot_hosts),
+                        F.pmod(F.xxhash64("url"), F.lit(self.cfg.salt_n)),
+                    ).otherwise(F.lit(0))
+                    batch = batch.repartition(self.cfg.repartition, host_e, salt)
+                else:
+                    batch = batch.repartition(self.cfg.repartition, F.xxhash64("url"))
+            return self._commit(batch, batch_id, wm, timer, jobs)
 
-    def _run_batch(
-        self, source: DataFrame, batch_id: str, jobs: JobGroup
+    def run_epoch(self, pages: DataFrame, epoch_id: int) -> BatchResult | None:
+        """Commit one Structured Streaming micro-batch (the `foreachBatch`
+        function of `start_routing_stream`) exactly like a batch: every
+        valid row of `pages`, with no watermark filter and no cap, since a
+        stream delivers each row once and a later file may hold older
+        pages. The watermark still advances to the highest key committed.
+        Returns None, committing nothing, for the epoch id the last epoch
+        commit recorded (a replay after a restart), or for an empty epoch."""
+        if self.state_tbl.state().get("last_epoch") == epoch_id:
+            return None
+        batch_id = self._next_batch_id()
+        with JobGroup(
+            self.spark.sparkContext, f"pagelog-{batch_id}", "discover_dims"
+        ) as jobs:
+            return self._commit(
+                _keyed(pages), batch_id, self.watermark(), StageTimer(), jobs,
+                epoch_id=epoch_id,
+            )
+
+    def _exhausted(self, batch_id: str, timer: StageTimer, jobs: JobGroup) -> None:
+        timer.lap(jobs.stage)
+        jobs.next_stage(None)
+        write_metrics_sidecar(
+            self.state_tbl.path, batch_id,
+            {"batch_id": batch_id, "exhausted": True, "n_input": 0,
+             "stage_seconds": dict(timer.stages),
+             "stage_jobs": jobs.stage_jobs, "spark_jobs": jobs.n_jobs(),
+             "committed_at": time.time()},
+        )
+
+    def _commit(
+        self,
+        batch: DataFrame,
+        batch_id: str,
+        wm: Watermark,
+        timer: StageTimer,
+        jobs: JobGroup,
+        epoch_id: int | None = None,
     ) -> BatchResult | None:
-        timer = StageTimer()
-        wm = self.watermark()
+        """The wide pass over the selected `batch` and every commit of it,
+        the watermark (and `epoch_id`, if given) last. Returns None when
+        `batch` holds no row."""
 
         def lap(next_stage: str | None = None) -> None:
             timer.lap(jobs.stage)
             jobs.next_stage(next_stage)
 
-        def exhausted() -> None:
-            lap()
-            write_metrics_sidecar(
-                self.state_tbl.path, batch_id,
-                {"batch_id": batch_id, "exhausted": True, "n_input": 0,
-                 "stage_seconds": dict(timer.stages),
-                 "stage_jobs": jobs.stage_jobs, "spark_jobs": jobs.n_jobs(),
-                 "committed_at": time.time()},
-            )
-
-        # validity filter BEFORE the capped ordered selection: null-keyed rows
-        # sort first under ASC NULLS FIRST and would wedge the watermark loop
-        valid_source = source.where(
-            F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-        )
-        batch = next_batch(valid_source, wm, self.cfg.cap)
-        if batch is None:  # capped bound found nothing above the watermark
-            exhausted()
-            return None
-        if self.cfg.repartition:
-            # Explicit batch partitioning (the north rule's hashed-url +
-            # hot-host salting). Host-keyed partitioning co-locates each
-            # host's pages; hosts the PREVIOUS batch's aggregate showed
-            # above salt_threshold of batch volume get a url-hash salt in
-            # [0, salt_n) so no single reducer owns a hot host. First
-            # batch (no learned hot set yet) partitions by pure url hash —
-            # uniform by construction.
-            host_e = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
-            if self._hot_hosts:
-                salt = F.when(
-                    host_e.isin(self._hot_hosts),
-                    F.pmod(F.xxhash64("url"), F.lit(self.cfg.salt_n)),
-                ).otherwise(F.lit(0))
-                batch = batch.repartition(self.cfg.repartition, host_e, salt)
-            else:
-                batch = batch.repartition(self.cfg.repartition, F.xxhash64("url"))
-
         lap("parse_route_write")
 
         # -- THE wide pass: parse → enrich → route → partitioned write
-        staged = self.routed(batch)
+        staged = wide_pass(
+            batch, self._host_df(), self._lang_df(), self._rule,
+            self.cfg.default_sink, broadcast_host=not self._dims_spilled,
+        )
         stage_dir = os.path.join(self.wh.root, "_staging", batch_id)
         wm_bound_row = None
         if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
@@ -523,8 +549,7 @@ class Pipeline:
         sink_dirs = [d for d in os.listdir(stage_dir) if d.startswith("sink=")]
         if not sink_dirs:
             shutil.rmtree(stage_dir, ignore_errors=True)
-            exhausted()
-            return None
+            return self._exhausted(batch_id, timer, jobs)
         # the staged file count is a direct proxy for write tasks x sinks
         # (one data file per task-sink pair), known from a pure driver-side
         # listing
@@ -636,9 +661,7 @@ class Pipeline:
                     state_update={"last_batch": batch_id, "last_batch_rows": n_rows},
                     # drop_reason is quarantine-only triage data; routed
                     # sink partitions carry it always-null (single
-                    # partitionBy write), so sink tables project it away.
-                    # The streaming router writes the same wide_pass rows
-                    # minus drop_reason, so the two sink schemas are equal
+                    # partitionBy write), so sink tables project it away
                     read_drop=None if s == QUARANTINE else ["drop_reason"],
                 )
             if s != QUARANTINE:
@@ -728,6 +751,7 @@ class Pipeline:
         self.state_tbl.set_state(
             **new_wm.to_state(), n_batches=n_batches, last_batch=batch_id,
             hot_hosts=self._hot_hosts, dims_spilled=self._dims_spilled,
+            **({} if epoch_id is None else {"last_epoch": epoch_id}),
         )
         lap()
 
@@ -758,6 +782,7 @@ class Pipeline:
                 "spark_jobs": jobs.n_jobs(),
                 "watermark": result.watermark,
                 "stage_dir": stage_dir,
+                "epoch_id": epoch_id,
                 "committed_at": time.time(),
             },
         )

@@ -126,17 +126,16 @@ def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFra
 
 def advance(batch_max: tuple | None, wm: Watermark) -> Watermark:
     """New watermark from the batch's max (epoch micros, url) key; None
-    batch → keep. The timestamp is stored as a zone-less UTC string."""
+    batch → keep. The timestamp is stored as a zone-less UTC string. A key
+    not above the stored watermark keeps it: a capped batch never holds
+    one, but a stream epoch may hold only pages older than an earlier
+    epoch's."""
     if batch_max is None:
         return wm
     us, url = batch_max
     ts = (_EPOCH + timedelta(microseconds=us)).isoformat(sep=" ")
+    if not wm.is_unset() and (datetime.fromisoformat(ts), url) <= (
+        datetime.fromisoformat(wm.ts), wm.url
+    ):
+        return wm
     return Watermark(ts=ts, url=url)
-
-
-def batch_bounds(batch: DataFrame) -> tuple | None:
-    """Max (epoch micros, url) key of the batch — one tiny aggregate."""
-    row = batch.agg(max_key().alias("m")).collect()[0]
-    if row["m"] is None:
-        return None
-    return (row["m"]["us"], row["m"]["url"])

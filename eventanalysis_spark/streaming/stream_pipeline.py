@@ -8,27 +8,25 @@ is the `readStream` shape for continuous sources:
   T1 watermark      → checkpointLocation offsets + withWatermark for
                       event-time completeness
   T2 bounded batch  → maxFilesPerTrigger / availableNow trigger
-  T4 atomic commit  → foreachBatch + warehouse snapshot commit per epoch
+  T4 atomic commit  → the batch commit per epoch: foreachBatch hands each
+                      micro-batch to `Pipeline.run_epoch`
   T5 late windows   → withWatermark gating on the windowed aggregate
 
-The transformation graph is the batch path's own function,
-`pipeline.wide_pass` (mapInPandas parse with text features → enrich →
-route, dropped rows marked QUARANTINE), with the target warehouse's dims
-and rules through `Pipeline.routed`; it composes into a streaming plan
-unchanged. Each epoch writes the non-quarantined rows minus drop_reason,
-so a `stream_sink_<s>` table has the columns of the batch `sink_<s>`.
-Only source/sink wiring differs.
+An epoch is committed by the batch pipeline's own code: the wide pass,
+the staged write, the sink, quarantine, observation, aggregate and
+lineage commits, dim growth and the state commit, which also records the
+epoch id so a replayed epoch commits nothing. A stream and a batch run
+over the same pages leave the same warehouse tables; only source wiring
+differs.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventanalysis_spark import datagen
-from eventanalysis_spark.pipeline import QUARANTINE, Pipeline, PipelineConfig
+from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
 PAGES_SCHEMA_DDL = datagen.PAGES_DDL
 
@@ -53,42 +51,21 @@ def start_routing_stream(
     max_files_per_trigger: int | None = None,
     default_sink: str = datagen.DEFAULT_SINK,
 ):
-    """foreachBatch router: each epoch commits one snapshot per sink —
-    exactly-once via (epoch_id dedup in table state) + checkpoint offsets.
+    """foreachBatch router: each epoch is committed by
+    `Pipeline.run_epoch` into `warehouse` — exactly-once via the epoch id
+    in the pipeline state + checkpoint offsets.
 
-    Enriches and routes with the target warehouse's dim_host, dim_lang
-    and route_rules as of the stream's start, validated by the batch
-    `Pipeline` (which bootstraps them in a fresh warehouse). Classes
-    without a rule go to `default_sink`, which the warehouse does not
-    store: pass the batch pipeline's `PipelineConfig.default_sink`."""
+    Epochs enrich with the warehouse's dims as of that epoch (a host or
+    lang an epoch discovers gets its id from the next epoch on) and route
+    with its route_rules, validated (and bootstrapped in a fresh
+    warehouse) when the stream starts. Classes without a rule go to
+    `default_sink`, which the warehouse does not store: pass the batch
+    pipeline's `PipelineConfig.default_sink`."""
     pipe = Pipeline(spark, PipelineConfig(warehouse=warehouse, default_sink=default_sink))
-    wh = pipe.wh
-    routed = pipe.routed(read_pages_stream(spark, source_path, max_files_per_trigger))
-
-    def sink_batch(df: DataFrame, epoch_id: int) -> None:
-        # persist the transformed micro-batch: foreachBatch re-executes the
-        # full plan (incl. the parse UDF) for EVERY action otherwise — the
-        # sink-discovery collect plus one write per sink would re-parse the
-        # epoch n_sinks+1 times at cluster scale
-        df = df.where(F.col("sink") != QUARANTINE).drop("drop_reason").persist()
-        try:
-            sinks = [r["sink"] for r in df.select("sink").distinct().collect()]
-            for s in sorted(sinks):
-                tbl = wh.table(f"stream_sink_{s}")
-                if tbl.state().get("last_epoch") == epoch_id:
-                    continue  # exactly-once on restart
-                tbl.append(
-                    df.where(F.col("sink") == s).drop("sink"),
-                    meta={"epoch": epoch_id},
-                    state_update={"last_epoch": epoch_id},
-                )
-        finally:
-            df.unpersist()
-
     writer = (
-        routed.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink_batch)
+        read_pages_stream(spark, source_path, max_files_per_trigger)
+        .writeStream.option("checkpointLocation", checkpoint)
+        .foreachBatch(pipe.run_epoch)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

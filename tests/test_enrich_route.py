@@ -10,18 +10,11 @@ from pyspark.sql import functions as F
 from eventanalysis_spark import datagen
 from eventanalysis_spark.operators.enrich import (
     assign_ids,
-    discover_and_grow,
     discover_new_keys,
     enrich_pages,
 )
 from eventanalysis_spark.operators.parse import parse_pages
-from eventanalysis_spark.operators.route import (
-    apply_rules,
-    observation_counts,
-    route_by,
-    routed_only,
-    rule_lookup,
-)
+from eventanalysis_spark.operators.route import route_by, rule_lookup
 
 
 @pytest.fixture(scope="module")
@@ -62,28 +55,23 @@ def test_discovery_finds_exactly_missing_keys(spark, parsed):
 def test_sequential_id_assignment(spark, parsed):
     """Ids continue from the dim's max, deterministically ordered by key
     (ProviderInfoCache.cs:126 semantics)."""
-    new, grown = discover_and_grow(
-        parsed, datagen.host_info_df(spark), ["host"], id_col="host_id"
+    dim = datagen.host_info_df(spark)
+    start = dim.agg(F.max("host_id")).collect()[0][0]
+    new = assign_ids(
+        discover_new_keys(parsed, dim, ["host"]), "host_id", ["host"], start_after=start
     )
     rows = sorted(new.collect(), key=lambda r: r.host)
-    start = len(datagen.HOSTS) - 4
+    assert start == len(datagen.HOSTS) - 4
     assert [r.host_id for r in rows] == [start + 1 + i for i in range(4)]
     # grown dim has no id collisions
-    ids = [r.host_id for r in grown.collect()]
+    ids = [r.host_id for r in dim.unionByName(new, allowMissingColumns=True).collect()]
     assert len(ids) == len(set(ids)) == len(datagen.HOSTS)
 
 
-def test_hash_id_mode_is_stable(spark, parsed):
-    new = discover_new_keys(parsed, datagen.host_info_df(spark), ["host"])
-    a = {r.host: r.host_id for r in assign_ids(new, "host_id", ["host"], mode="hash").collect()}
-    b = {r.host: r.host_id for r in assign_ids(new, "host_id", ["host"], mode="hash").collect()}
-    assert a == b
-
-
 def test_routing_semantics(spark, parsed):
-    wr = apply_rules(
+    wr = route_by(
         enrich_pages(parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)),
-        datagen.route_rules_df(spark),
+        rule_lookup(datagen.route_rules_df(spark)),
     )
     pdf = wr.select("event_class", "ever", "allowed", "sink").toPandas()
     # default-allow: unknown classes → allowed, misc sink
@@ -105,9 +93,9 @@ def test_routing_semantics(spark, parsed):
 def test_drop_reason_triage(spark, parsed):
     """Quarantined rows carry WHY they were dropped ('disabled' vs
     'min_version'); routed rows carry null."""
-    wr = apply_rules(
+    wr = route_by(
         enrich_pages(parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)),
-        datagen.route_rules_df(spark),
+        rule_lookup(datagen.route_rules_df(spark)),
     )
     pdf = wr.select("event_class", "ever", "allowed", "drop_reason").toPandas()
     assert pdf[pdf.allowed].drop_reason.isna().all()
@@ -115,15 +103,11 @@ def test_drop_reason_triage(spark, parsed):
     assert (login.drop_reason == "disabled").all()
     prod_low = pdf[(pdf.event_class == "product") & (pdf.ever < 2)]
     assert (prod_low.drop_reason == "min_version").all()
-    # routed_only strips the vacuous column
-    from eventanalysis_spark.operators.route import routed_only
-
-    assert "drop_reason" not in routed_only(wr).columns
 
 
 def test_rule_lookup_reused_across_frames(spark, parsed):
     """One rule lookup, built once, routes any number of frames exactly
-    like apply_rules does per frame."""
+    like a lookup built anew for each frame."""
     enriched = enrich_pages(
         parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)
     )
@@ -132,28 +116,14 @@ def test_rule_lookup_reused_across_frames(spark, parsed):
     cols = ["url", "allowed", "drop_reason", "sink"]
     for frame in (enriched, enriched.where(F.col("ever") >= 2)):
         got = route_by(frame, rule).select(cols).collect()
-        want = apply_rules(frame, rules).select(cols).collect()
+        want = route_by(frame, rule_lookup(rules)).select(cols).collect()
         assert got and Counter(map(tuple, got)) == Counter(map(tuple, want))
 
 
-def test_observation_includes_dropped(spark, parsed):
-    """'observe even ignored events!' (EventImportJob.cs:93-94)."""
-    wr = apply_rules(
-        enrich_pages(parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)),
-        datagen.route_rules_df(spark),
-    )
-    obs = {r.event_class: r for r in observation_counts(wr).collect()}
-    assert obs["login"].n_observed > 0
-    assert obs["login"].n_routed == 0
-    assert obs["login"].n_dropped == obs["login"].n_observed
-    total_routed = routed_only(wr).count()
-    assert sum(r.n_routed for r in obs.values()) == total_routed
-
-
 def test_rules_join_is_broadcast(spark, parsed):
-    wr = apply_rules(
+    wr = route_by(
         enrich_pages(parsed, datagen.host_info_df(spark), datagen.lang_info_df(spark)),
-        datagen.route_rules_df(spark),
+        rule_lookup(datagen.route_rules_df(spark)),
     )
     plan = wr._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan

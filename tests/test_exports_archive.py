@@ -226,46 +226,109 @@ def test_streaming_windowed_counts_match_batch(spark, pages, pages_path):
     assert g.equals(w)
 
 
+def _obs_totals(p):
+    return {
+        r["event_class"]: (r["o"], r["r"], r["d"])
+        for r in p.wh.table("observations").read(p.spark)
+        .groupBy("event_class")
+        .agg(F.sum("n_observed").alias("o"), F.sum("n_routed").alias("r"),
+             F.sum("n_dropped").alias("d"))
+        .collect()
+    }
+
+
+def _urls(df):
+    return {x.url for x in df.select("url").collect()}
+
+
 def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
-    """The streaming router commits each epoch once (a restart on the same
-    checkpoint adds nothing), and its sinks equal the batch pipeline's:
-    the same columns and the same url set per sink."""
+    """The streaming router commits each epoch once through the batch
+    pipeline: a restart on the same checkpoint adds no snapshot, and a
+    replayed epoch id commits nothing. A multi-epoch stream leaves the
+    warehouse one uncapped batch leaves: the same sink tables with the
+    same columns and url sets, the same per-sink aggregates and the same
+    per-class observation totals."""
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
 
     wh_path = str(tmp_path / "swh")
     ckpt = str(tmp_path / "ckpt")
-    q = start_routing_stream(spark, pages_path, wh_path, ckpt)
-    q.awaitTermination()
+    start_routing_stream(
+        spark, pages_path, wh_path, ckpt, max_files_per_trigger=4
+    ).awaitTermination()
     wh = Warehouse(wh_path)
-    total = sum(
-        wh.table(t).read(spark).count()
-        for t in wh.tables()
-        if t.startswith("stream_sink_")
-    )
-    assert total > 0
-    # restart with same checkpoint: no new data → no duplicate commits
-    q2 = start_routing_stream(spark, pages_path, wh_path, ckpt)
-    q2.awaitTermination()
-    total2 = sum(
-        wh.table(t).read(spark).count()
-        for t in wh.tables()
-        if t.startswith("stream_sink_")
-    )
-    assert total2 == total
+
+    def snapshots():
+        return {t: len(wh.table(t).snapshots()) for t in wh.tables()}
+
+    before = snapshots()
+    stream = Pipeline(spark, PipelineConfig(warehouse=wh_path))
+    state = stream.state_tbl.state()
+    assert state["n_batches"] > 1
+    # restart with same checkpoint: no new data → no commit
+    start_routing_stream(
+        spark, pages_path, wh_path, ckpt, max_files_per_trigger=4
+    ).awaitTermination()
+    assert snapshots() == before
+    # an epoch id replayed after its commit commits nothing
+    assert stream.run_epoch(spark.read.parquet(pages_path), state["last_epoch"]) is None
+    assert snapshots() == before
+    assert stream.state_tbl.state() == state
     # batch/stream parity: one uncapped batch over the same pages
     pipe = Pipeline(spark, PipelineConfig(warehouse=str(tmp_path / "bwh"), cap=None))
     r = pipe.run_batch(spark.read.parquet(pages_path))
-    assert sorted(f"stream_sink_{s}" for s in r.sink_counts) == sorted(
-        t for t in wh.tables() if t.startswith("stream_sink_")
-    )
+    assert sorted(wh.tables()) == sorted(pipe.wh.tables())
     for s in r.sink_counts:
-        batch_df = pipe.sink_table(s)
-        stream_df = wh.table(f"stream_sink_{s}").read(spark)
+        batch_df, stream_df = pipe.sink_table(s), stream.sink_table(s)
         assert stream_df.columns == batch_df.columns, s
-        assert {x.url for x in stream_df.select("url").collect()} == {
-            x.url for x in batch_df.select("url").collect()
-        }, s
+        assert _urls(stream_df) == _urls(batch_df), s
+    assert stream.total_sink_aggregates().toPandas().equals(
+        pipe.total_sink_aggregates().toPandas()
+    )
+    assert _obs_totals(stream) == _obs_totals(pipe)
+
+
+def test_stream_epochs_grow_dims(spark, pages_path, tmp_path):
+    """Stream epochs grow the warehouse dims like batches do: a stream of
+    one file per epoch ends with the dims of one uncapped batch, and a
+    host first seen in one epoch is enriched (non-null host_id) in every
+    later epoch."""
+    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
+    from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
+
+    wh_path = str(tmp_path / "swh")
+    start_routing_stream(
+        spark, pages_path, wh_path, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    ).awaitTermination()
+    stream = Pipeline(spark, PipelineConfig(warehouse=wh_path))
+    batch = Pipeline(spark, PipelineConfig(warehouse=str(tmp_path / "bwh"), cap=None))
+    batch.run_batch(spark.read.parquet(pages_path))
+
+    def dim(p, table, key):
+        return sorted(r[key] for r in p.wh.table(table).read(spark).collect())
+
+    assert dim(stream, "dim_host", "host") == dim(batch, "dim_host", "host")
+    assert dim(stream, "dim_lang", "lang") == dim(batch, "dim_lang", "lang")
+    assert len(dim(stream, "dim_host", "host")) == 20
+    assert len(dim(stream, "dim_lang", "lang")) == 10
+    ids = dim(stream, "dim_host", "host_id")
+    assert len(ids) == len(set(ids))
+
+    n_epochs = stream.state_tbl.state()["n_batches"]
+    assert n_epochs > 2
+    first_seen: dict[str, int] = {}
+    late_new_hosts = 0  # undictionaried hosts checked after their first epoch
+    for k in range(1, n_epochs + 1):
+        staged = spark.read.parquet(os.path.join(wh_path, "_staging", f"b{k:06d}"))
+        for r in staged.select("host", "host_id").distinct().collect():
+            if r.host is None:
+                continue
+            if r.host in first_seen:
+                assert r.host_id is not None, (r.host, k, first_seen[r.host])
+                late_new_hosts += r.host in datagen.HOSTS[-4:]
+            else:
+                first_seen[r.host] = k
+    assert late_new_hosts > 0
 
 
 def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_path):
@@ -273,11 +336,11 @@ def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_p
     routes and enriches like that warehouse's batch pipeline: a custom
     rule (article → sink news), a custom registrar and the batch's
     default sink reach the stream's sinks, with the batch sinks' columns,
-    urls and registrars."""
+    urls and registrars. Stream and batch write the same tables, so the
+    stream runs into a second warehouse bootstrapped the same way."""
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
 
-    wh_path = str(tmp_path / "wh")
     rules = spark.createDataFrame(
         [("article", 0, True, "news"), ("login", 0, False, "security")],
         "event_class string, min_version int, enabled boolean, sink string",
@@ -286,14 +349,21 @@ def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_p
         [(i, h, "custom-registrar") for i, h, _ in datagen.host_info_rows()],
         "host_id int, host string, registrar string",
     )
-    pipe = Pipeline(
-        spark, PipelineConfig(warehouse=wh_path, cap=None, default_sink="other"),
-        host_info=hosts, rules=rules,
-    )
+
+    def bootstrap(name, cap=20000):
+        return Pipeline(
+            spark,
+            PipelineConfig(warehouse=str(tmp_path / name), cap=cap, default_sink="other"),
+            host_info=hosts, rules=rules,
+        )
+
+    pipe = bootstrap("wh", cap=None)
     counts = pipe.run_batch(spark.read.parquet(pages_path)).sink_counts
     assert counts["news"] > 0 and counts["other"] > 0
+    stream = bootstrap("swh")
     start_routing_stream(
-        spark, pages_path, wh_path, str(tmp_path / "ckpt"), default_sink="other"
+        spark, pages_path, str(tmp_path / "swh"), str(tmp_path / "ckpt"),
+        default_sink="other",
     ).awaitTermination()
 
     def rows(df):
@@ -301,7 +371,7 @@ def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_p
 
     for sink in ("news", "other"):
         batch_df = pipe.sink_table(sink)
-        stream_df = Warehouse(wh_path).table(f"stream_sink_{sink}").read(spark)
+        stream_df = stream.sink_table(sink)
         assert stream_df.columns == batch_df.columns
         assert rows(stream_df) == rows(batch_df), sink
     # hosts missing from the dim table enrich to null

@@ -115,11 +115,12 @@ def test_partial_failure_is_idempotent(spark, pages, wh):
 
 def test_observation_counts_include_dropped(spark, pages, wh):
     p = _mk(spark, wh, cap=None)
-    p.run_batch(pages)
+    r = p.run_batch(pages)
     obs = p.wh.table("observations").read(spark)
     login = obs.where(F.col("event_class") == "login").collect()[0]
     assert login.n_observed > 0 and login.n_routed == 0
     assert login.n_dropped == login.n_observed
+    assert obs.agg(F.sum("n_routed")).collect()[0][0] == r.n_routed
 
 
 def test_lineage_and_metrics_sidecars(spark, pages, wh):

@@ -17,7 +17,7 @@ from eventanalysis_spark.sources.incremental import (
     Watermark,
     advance,
     above_watermark,
-    batch_bounds,
+    max_key,
     next_batch,
 )
 
@@ -107,9 +107,24 @@ def test_capped_batches_advance_through_ties(spark):
         if b is None:
             break
         seen.extend(r.url for r in b.collect())
-        wm = advance(batch_bounds(b), wm)
+        m = b.agg(max_key().alias("m")).collect()[0]["m"]
+        wm = advance((m["us"], m["url"]), wm)
     assert seen == sorted(seen)
     assert len(seen) == 10  # every tie eventually consumed exactly once
+
+
+def test_advance_never_moves_the_watermark_back():
+    """An epoch whose max key is below the watermark (a stream file of
+    older pages) leaves it in place; a key above it still advances it."""
+    us = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    wm = Watermark(ts="2024-01-01 00:00:00", url="m")
+    assert advance((us - 1, "z"), wm) == wm
+    assert advance((us, "a"), wm) == wm
+    assert advance((us, "m"), wm) == wm
+    assert advance((us, "n"), wm) == Watermark(ts="2024-01-01 00:00:00", url="n")
+    assert advance((us + 1, "a"), wm) == Watermark(
+        ts="2024-01-01 00:00:00.000001", url="a"
+    )
 
 
 def test_next_batch_sizes_tasks_by_rows(pages, monkeypatch):

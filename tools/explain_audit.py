@@ -18,7 +18,7 @@ def main() -> None:
     from eventanalysis_spark.operators.enrich import enrich_pages
     from eventanalysis_spark.operators.parse import parse_pages
     from eventanalysis_spark.operators.query import HeaderQuery
-    from eventanalysis_spark.operators.route import apply_rules
+    from eventanalysis_spark.operators.route import route_by, rule_lookup
     from eventanalysis_spark.session import get_spark
 
     spark = get_spark("explain-audit", master="local[4]", shuffle_partitions=4,
@@ -83,10 +83,10 @@ def main() -> None:
     )
 
     # 2. enrich + route: broadcast-only joins
-    wr = apply_rules(
+    wr = route_by(
         enrich_pages(parse_pages(pages), datagen.host_info_df(spark),
                      datagen.lang_info_df(spark)),
-        datagen.route_rules_df(spark),
+        rule_lookup(datagen.route_rules_df(spark)),
     )
     plan2 = wr._jdf.queryExecution().executedPlan().toString()
     audit(
