@@ -7,9 +7,10 @@ Two layers:
     group the stage's jobs are tagged with.
 
 The per-partition lineage is rolled up by the pipeline from its stats
-grain (pipeline.py). Metrics are committed as snapshot metadata on the destination table plus a
-JSON sidecar under <warehouse>/<table>/_metrics/ so they survive and are
-greppable (the reference's tag files next to the DB)."""
+grain and appended to the `lineage` warehouse table (pipeline.py).
+Metrics are committed as snapshot metadata on the destination table plus
+a JSON sidecar under <warehouse>/<table>/_metrics/ so they survive and
+are greppable (the reference's tag files next to the DB)."""
 
 from __future__ import annotations
 

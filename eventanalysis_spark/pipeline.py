@@ -26,11 +26,13 @@ Scale design (100 TB / 1000 executors):
     into a single partitionBy(sink) columnar write (dropped rows →
     quarantine partition); every downstream stat comes from ONE narrow
     aggregate scan of that staged data instead of re-running the UDF or
-    caching the wide frame. While dims fit the driver cache and lineage
-    fits the manifest, that aggregate is one Arrow collect and lineage,
+    caching the wide frame. While the dims fit the driver cache, that
+    aggregate is one Arrow collect, and the per-partition lineage,
     observations, dim discovery, hot hosts and the per-sink aggregate
-    are pyarrow roll-ups committed from the driver (no Spark job);
-    past either ceiling the same roll-ups stay distributed;
+    are pyarrow roll-ups of it committed from the driver (no Spark job).
+    Past the dim ceiling the driver collects it without the host key,
+    and only the host-grain outputs (host growth, hot hosts, the per-sink
+    aggregate) stay distributed;
   - a capped batch is a bound job, the shuffle of its selected rows, the
     write job and the stats collect;
     a call that finds the source exhausted runs only the bound job;
@@ -110,6 +112,17 @@ _LANG_SCHEMA = StructType([
 _FINE_KEYS = ("sink", "part_id", "event_class", "host", "lang")
 # grain of the per-batch sink_agg rows
 _AGG_KEYS = ["sink", "host", "lang", "event_class", "bucket"]
+# Driver dim-cache ceiling. Below it, host/lang dims live on the driver
+# (the reference's ProviderInfoCache shape: tiny dims enriched as
+# broadcast local relations, driver-side sequential ids, and the batch
+# stats rolled up on the driver). Once the host dim outgrows it, the
+# pipeline PERMANENTLY switches to the table path (flag persisted in
+# state): hosts stay in the warehouse table, discovery is a distributed
+# anti-join append (operators/enrich.py), the host-grain stats stay
+# distributed, and the enrich join stops forcing broadcast so AQE picks
+# the join strategy. At web scale hosts exceed 10^7 — a driver cache
+# cannot hold them.
+DIM_CACHE_LIMIT = 1_000_000
 # Staged-write codec: interleaved min-of-4 wide-pass timings at 400k/32c
 # measured snappy fastest (2.18-2.38s) vs lz4 (2.40-2.86s) and zstd
 # (2.40-2.83s) at BOTH bench split sizes, with output bytes on par with
@@ -226,29 +239,6 @@ class PipelineConfig:
     default_sink: str = datagen.DEFAULT_SINK
     salt_threshold: float = 0.05
     salt_n: int = 16
-    # Driver dim-cache ceiling. Below it, host/lang dims live on the
-    # driver (the reference's ProviderInfoCache shape: tiny dims enriched
-    # as broadcast local relations, driver-side sequential ids, and the
-    # batch stats rolled up on the driver). Once the host dim outgrows it,
-    # the pipeline PERMANENTLY switches to the table path (flag persisted
-    # in state): hosts stay in the warehouse table, discovery is a
-    # distributed anti-join append (operators/enrich.py), the batch stats
-    # stay distributed, and the enrich join stops forcing broadcast so AQE
-    # picks the join strategy. At web scale hosts exceed 10^7 — a driver
-    # cache cannot hold them.
-    dim_cache_limit: int = 1_000_000
-    # Per-partition lineage transport. Inline (rolled up on the driver from
-    # the collected stats grain, embedded in the sink manifest JSON) is
-    # exact reference-tag-file parity and free at <=10^3 write tasks. But
-    # at cluster scale a batch can stage 10^5+ tasks x 10 sinks — millions
-    # of driver rows and an unboundedly growing manifest — so above this
-    # many staged data files the batch stats stay distributed: the
-    # per-partition lineage is written DISTRIBUTEDLY to the 'lineage'
-    # warehouse table (one bounded rollup of the cached fine-grain
-    # aggregate; the driver only ever holds the (sink, event_class)
-    # observation grain) and each sink commit carries a
-    # {"lineage_ref": ...} pointer.
-    lineage_inline_max: int = 4096
     # xxhash64(url) partitions of every batch. None: a capped batch runs
     # ceil(rows / incremental.ROWS_PER_TASK) tasks, an uncapped one runs
     # as scanned
@@ -295,7 +285,7 @@ class Pipeline:
         # driver-side dim caches (the reference's ProviderInfoCache/J4 shape):
         # dims are tiny; keeping them on the driver avoids re-reading parquet
         # every batch and makes the enrich joins broadcast-from-local.
-        # Once the host dim has outgrown dim_cache_limit (flag persisted in
+        # Once the host dim has outgrown DIM_CACHE_LIMIT (flag persisted in
         # state), hosts stay in the warehouse table — no driver cache.
         self._dims_spilled = bool(self.state_tbl.state().get("dims_spilled", False))
         self._host_rows = (
@@ -351,7 +341,7 @@ class Pipeline:
         this on its single thread, ProviderInfoCache.cs:92-136). Commits
         are APPEND-ONLY driver-side arrow writes of just the new rows — no
         Spark job, no full-dim rewrite. When the host cache outgrows
-        cfg.dim_cache_limit the pipeline flips to the table path
+        DIM_CACHE_LIMIT the pipeline flips to the table path
         (_grow_hosts_table) permanently."""
         n_h = n_l = 0
         new_hosts = (
@@ -372,7 +362,7 @@ class Pipeline:
                 meta={"batch": batch_id},
                 state_update={"last_batch": batch_id},
             )
-            if len(self._host_rows) > self.cfg.dim_cache_limit:
+            if len(self._host_rows) > DIM_CACHE_LIMIT:
                 # permanent switch to the table path; flag rides the next
                 # watermark commit and every future Pipeline sees it
                 self._dims_spilled = True
@@ -477,15 +467,21 @@ class Pipeline:
                     batch = batch.repartition(self.cfg.repartition, F.xxhash64("url"))
             return self._commit(batch, batch_id, wm, timer, jobs)
 
-    def run_epoch(self, pages: DataFrame, epoch_id: int) -> BatchResult | None:
-        """Commit one Structured Streaming micro-batch (the `foreachBatch`
-        function of `start_routing_stream`) exactly like a batch: every
-        valid row of `pages`, with no watermark filter and no cap, since a
-        stream delivers each row once and a later file may hold older
-        pages. The watermark still advances to the highest key committed.
-        Returns None, committing nothing, for the epoch id the last epoch
-        commit recorded (a replay after a restart), or for an empty epoch."""
-        if self.state_tbl.state().get("last_epoch") == epoch_id:
+    def run_epoch(
+        self, pages: DataFrame, epoch_id: int, stream_id: str
+    ) -> BatchResult | None:
+        """Commit one Structured Streaming micro-batch (called from the
+        `foreachBatch` function of `start_routing_stream`) exactly like a
+        batch: every valid row of `pages`, with no watermark filter and no
+        cap, since a stream delivers each row once and a later file may
+        hold older pages. The watermark still advances to the highest key
+        committed. `stream_id` names the stream and must stay the same
+        across its restarts (the query id of its checkpoint): Spark numbers
+        each checkpoint's epochs from 0, so the state keeps the last epoch
+        per stream. Returns None, committing nothing, for the epoch id the
+        stream's last epoch commit recorded (a replay after a restart), or
+        for an empty epoch."""
+        if self.state_tbl.state().get("last_epochs", {}).get(stream_id) == epoch_id:
             return None
         batch_id = self._next_batch_id()
         with JobGroup(
@@ -493,7 +489,7 @@ class Pipeline:
         ) as jobs:
             return self._commit(
                 _keyed(pages), batch_id, self.watermark(), StageTimer(), jobs,
-                epoch_id=epoch_id,
+                epoch=(stream_id, epoch_id),
             )
 
     def _exhausted(self, batch_id: str, timer: StageTimer, jobs: JobGroup) -> None:
@@ -514,11 +510,11 @@ class Pipeline:
         wm: Watermark,
         timer: StageTimer,
         jobs: JobGroup,
-        epoch_id: int | None = None,
+        epoch: tuple[str, int] | None = None,
     ) -> BatchResult | None:
         """The wide pass over the selected `batch` and every commit of it,
-        the watermark (and `epoch_id`, if given) last. Returns None when
-        `batch` holds no row."""
+        the watermark (and the `(stream_id, epoch_id)` of a stream epoch)
+        last. Returns None when `batch` holds no row."""
 
         def lap(next_stage: str | None = None) -> None:
             timer.lap(jobs.stage)
@@ -550,9 +546,8 @@ class Pipeline:
         if not sink_dirs:
             shutil.rmtree(stage_dir, ignore_errors=True)
             return self._exhausted(batch_id, timer, jobs)
-        # the staged file count is a direct proxy for write tasks x sinks
-        # (one data file per task-sink pair), known from a pure driver-side
-        # listing
+        # one data file per write task and sink, known from a pure
+        # driver-side listing
         n_staged_files = sum(
             1
             for _r, _d, _fs in os.walk(stage_dir)
@@ -576,27 +571,22 @@ class Pipeline:
             *_FINE_KEYS,
             period_key(F.col("warc_ts"), self.cfg.period).alias("bucket"),
         ).agg(*_row_stats())
-        agg_tbl = self.wh.table("sink_agg")
-
-        # Lineage transport decision: above the inline ceiling the driver
-        # must never hold per-partition rows.
-        spill_lineage = n_staged_files > self.cfg.lineage_inline_max
-        if not (spill_lineage or self._dims_spilled):
-            # driver path: the fine grain (10^3-10^4 rows per batch while
-            # dims fit the driver cache and lineage fits the manifest) is
-            # ONE Arrow collect; everything below rolls up from it with
-            # pyarrow group-bys
+        if not self._dims_spilled:
+            # the fine grain (10^3-10^4 rows per batch while dims fit the
+            # driver cache) is ONE Arrow collect; everything below rolls
+            # up from it with pyarrow group-bys
             fine = fine_grain.toArrow()
             fine_grain = None
         else:
-            # spill paths: the fine grain stays distributed (persisted);
-            # the driver collects only the lineage/observation grain
+            # spilled dims: the host-keyed fine grain stays distributed
+            # (persisted) for the host-grain outputs; the driver collects
+            # the grain without host and bucket, bounded by write tasks x
+            # sinks x classes x langs like the write job's commit messages
             fine_grain = fine_grain.persist()
-            keys = (
-                ["sink", "event_class"] if spill_lineage
-                else ["sink", "part_id", "event_class"]
+            fine = (
+                fine_grain.groupBy("sink", "part_id", "event_class", "lang")
+                .agg(*_rollup_stats()).toArrow()
             )
-            fine = fine_grain.groupBy(*keys).agg(*_rollup_stats()).toArrow()
         n_input = pc.sum(fine["n"]).as_py() or 0
         hot_thr = self.cfg.salt_threshold * max(n_input, 1)
 
@@ -605,31 +595,6 @@ class Pipeline:
             wm_bound_row = stg.select(max_key().alias("mx")).collect()[0]["mx"]
         by_sink = _rollup(fine, ["sink"], [("n", "sum")])
         sink_rows = dict(zip(by_sink["sink"].to_pylist(), by_sink["n"].to_pylist()))
-        lineage: dict[str, list] = {}
-        if not spill_lineage:
-            parts = _rollup(fine, ["sink", "part_id"]).sort_by(
-                [("sink", "ascending"), ("part_id", "ascending")]
-            )
-            for r in parts.to_pylist():
-                lineage.setdefault(r["sink"], []).append(
-                    {"partition": r["part_id"], "rows": r["n"],
-                     "ts_min": r["ts_min"], "ts_max": r["ts_max"],
-                     "bytes": r["bytes"]}
-                )
-        else:
-            # distributed per-partition lineage: one bounded rollup of the
-            # cached fine-grain aggregate, written cluster-side — the
-            # driver holds zero per-partition rows. Idempotent on resume
-            # via the same last_batch guard the sinks use.
-            lineage_tbl = self.wh.table("lineage")
-            if lineage_tbl.state().get("last_batch") != batch_id:
-                lineage_tbl.append(
-                    fine_grain.groupBy("sink", "part_id").agg(*_rollup_stats())
-                    .withColumnRenamed("n", "rows")
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    meta={"batch": batch_id},
-                    state_update={"last_batch": batch_id},
-                )
         bounds = (wm_bound_row["us"], wm_bound_row["url"])
         lap("fan_out")
 
@@ -647,17 +612,8 @@ class Pipeline:
             if os.path.exists(src_dir):
                 tbl.register_dir(
                     src_dir,
-                    meta={
-                        "batch": batch_id,
-                        "rows": n_rows,
-                        "watermark_from": wm.to_state(),
-                        "lineage": lineage.get(s, []),
-                        **(
-                            {"lineage_ref": {"table": "lineage", "batch": batch_id}}
-                            if spill_lineage
-                            else {}
-                        ),
-                    },
+                    meta={"batch": batch_id, "rows": n_rows,
+                          "watermark_from": wm.to_state()},
                     state_update={"last_batch": batch_id, "last_batch_rows": n_rows},
                     # drop_reason is quarantine-only triage data; routed
                     # sink partitions carry it always-null (single
@@ -669,11 +625,24 @@ class Pipeline:
         n_routed = sum(sink_counts.values())
         lap("aggregate")
 
-        # -- observation stats ("observe even ignored events",
-        # EventImportJob.cs:93-94) and the per-sink north-rule aggregate,
-        # quarantine included. Both are driver-side arrow commits, each
+        # -- per-partition lineage, observation stats ("observe even
+        # ignored events", EventImportJob.cs:93-94) and the per-sink
+        # north-rule aggregate, quarantine included. Each commit is
         # idempotent under its own last_batch guard, all before the
         # watermark advances (the overall commit point).
+        def batch_col(t: pa.Table) -> pa.Array:
+            return pa.array([batch_id] * t.num_rows, pa.string())
+
+        meta, guard = {"batch": batch_id}, {"last_batch": batch_id}
+        lineage_tbl = self.wh.table("lineage")
+        if lineage_tbl.state().get("last_batch") != batch_id:
+            parts = _rollup(fine, ["sink", "part_id"]).sort_by(
+                [("sink", "ascending"), ("part_id", "ascending")]
+            ).rename_columns(["sink", "part_id", "rows", "ts_min", "ts_max", "bytes"])
+            lineage_tbl.append_rows(
+                parts.append_column("batch_id", batch_col(parts)),
+                meta=meta, state_update=guard,
+            )
         obs_tbl = self.wh.table("observations")
         if obs_tbl.state().get("last_batch") != batch_id:
             dropped = pc.if_else(pc.equal(fine["sink"], QUARANTINE), fine["n"], 0)
@@ -687,71 +656,63 @@ class Pipeline:
                     "n_observed": obs["n"],
                     "n_routed": pc.subtract(obs["n"], obs["n_dropped"]),
                     "n_dropped": obs["n_dropped"],
-                    "batch_id": pa.array([batch_id] * obs.num_rows, pa.string()),
+                    "batch_id": batch_col(obs),
                 }),
-                meta={"batch": batch_id},
-                state_update={"last_batch": batch_id},
+                meta=meta, state_update=guard,
             )
+        agg_tbl = self.wh.table("sink_agg")
         if agg_tbl.state().get("last_batch") != batch_id:
-            meta, state = {"batch": batch_id}, {"last_batch": batch_id}
             if fine_grain is None:
                 agg = _rollup(fine, _AGG_KEYS, [("n", "sum")])
                 agg_tbl.append_rows(
-                    agg.append_column(
-                        "batch_id", pa.array([batch_id] * agg.num_rows, pa.string())
-                    ),
-                    meta=meta, state_update=state,
+                    agg.append_column("batch_id", batch_col(agg)),
+                    meta=meta, state_update=guard,
                 )
             else:
                 agg_tbl.append(
                     fine_grain.groupBy(*_AGG_KEYS).agg(F.sum("n").alias("n"))
                     .withColumn("batch_id", F.lit(batch_id)),
-                    meta=meta, state_update=state,
+                    meta=meta, state_update=guard,
                 )
 
-        # dimension discovery + hot-host detection from the same fine grain
+        # dimension discovery + hot-host detection from the same grain
         # (no extra scan, and on resume no read-back); new dim keys get
         # their ids here, so they attach to facts from the NEXT batch on
-        if self._dims_spilled:
+        langs = set(pc.unique(fine["lang"]).drop_null().to_pylist())
+        if fine_grain is None:
+            hosts = _rollup(fine, ["host"], [("n", "sum")])
+            n_new_hosts, n_new_langs = self._grow_dims(
+                set(hosts["host"].drop_null().to_pylist()), langs, batch_id
+            )
+            hot = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
+            self._hot_hosts = sorted(hot["host"].drop_null().to_pylist())
+        else:
             # table path: hosts never touch the driver — hot candidates
             # are filtered to >= threshold (≤ 1/salt_threshold rows by
-            # construction) and langs are a bounded distinct
+            # construction)
             batch_hosts = fine_grain.select("host").where(
                 F.col("host").isNotNull()
             ).distinct()
             n_new_hosts = self._grow_hosts_table(batch_hosts, batch_id)
-            langs = fine_grain.select("lang").distinct().collect()
-            _, n_new_langs = self._grow_dims(
-                set(), {r["lang"] for r in langs if r["lang"]}, batch_id
-            )
+            _, n_new_langs = self._grow_dims(set(), langs, batch_id)
             hot = (
                 fine_grain.groupBy("host").agg(F.sum("n").alias("n"))
                 .where(F.col("n") >= F.lit(hot_thr)).collect()
             )
             self._hot_hosts = sorted(r["host"] for r in hot if r["host"])
-        else:
-            kl = (
-                _rollup(fine, ["host", "lang"], [("n", "sum")]) if fine_grain is None
-                else fine_grain.groupBy("host", "lang").agg(F.sum("n").alias("n")).toArrow()
-            )
-            n_new_hosts, n_new_langs = self._grow_dims(
-                set(pc.unique(kl["host"]).drop_null().to_pylist()),
-                set(pc.unique(kl["lang"]).drop_null().to_pylist()),
-                batch_id,
-            )
-            hosts = _rollup(kl, ["host"], [("n", "sum")])
-            hosts = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
-            self._hot_hosts = sorted(hosts["host"].drop_null().to_pylist())
-        if fine_grain is not None:
             fine_grain.unpersist()
 
         # -- advance watermark (the overall batch commit point)
         new_wm = advance(bounds, wm)
-        n_batches = self.state_tbl.state().get("n_batches", 0) + 1
+        state = self.state_tbl.state()
+        stream_id, epoch_id = epoch or (None, None)
+        epochs = {} if epoch is None else {
+            "last_epochs": {**state.get("last_epochs", {}), stream_id: epoch_id}
+        }
         self.state_tbl.set_state(
-            **new_wm.to_state(), n_batches=n_batches, last_batch=batch_id,
-            hot_hosts=self._hot_hosts, dims_spilled=self._dims_spilled,
-            **({} if epoch_id is None else {"last_epoch": epoch_id}),
+            **new_wm.to_state(), n_batches=state.get("n_batches", 0) + 1,
+            last_batch=batch_id, hot_hosts=self._hot_hosts,
+            dims_spilled=self._dims_spilled, **epochs,
         )
         lap()
 
@@ -782,6 +743,7 @@ class Pipeline:
                 "spark_jobs": jobs.n_jobs(),
                 "watermark": result.watermark,
                 "stage_dir": stage_dir,
+                "stream_id": stream_id,
                 "epoch_id": epoch_id,
                 "committed_at": time.time(),
             },

@@ -146,6 +146,35 @@ class Table:
         return None
 
     # ---- write ---------------------------------------------------------
+    def _add_snapshot(
+        self,
+        m: dict,
+        d: str,
+        op: str,
+        meta: dict | None,
+        state_update: dict | None,
+    ) -> int:
+        """Commit manifest `m` with a new current snapshot whose dirs are
+        the live dirs plus `d` (op "append") or `d` alone ("overwrite")."""
+        prev = m["current"]
+        dirs = [d]
+        if op == "append" and prev is not None:
+            dirs = next(x for x in m["snapshots"] if x["id"] == prev)["dirs"] + dirs
+        sid = (prev or 0) + 1
+        m["snapshots"].append(
+            {
+                "id": sid,
+                "parent": prev,
+                "dirs": dirs,
+                "meta": {**(meta or {}), "op": op, "committed_at": time.time()},
+            }
+        )
+        m["current"] = sid
+        if state_update:
+            m.setdefault("state", {}).update(state_update)
+        self._commit(m)
+        return sid
+
     def _write_dir(
         self,
         df: DataFrame,
@@ -207,25 +236,8 @@ class Table:
         m = self._load()
         self._check_schema(m, df.schema)
         d = self._write_dir(df, partition_by, coalesce)
-        prev = m["current"]
-        prev_dirs = (
-            next(x for x in m["snapshots"] if x["id"] == prev)["dirs"] if prev is not None else []
-        )
-        sid = (prev or 0) + 1
-        m["snapshots"].append(
-            {
-                "id": sid,
-                "parent": prev,
-                "dirs": prev_dirs + [d],
-                "meta": {**(meta or {}), "op": "append", "committed_at": time.time()},
-            }
-        )
-        m["current"] = sid
-        m["schema"] = df.schema.json() if m["schema"] is None else m["schema"]
-        if state_update:
-            m.setdefault("state", {}).update(state_update)
-        self._commit(m)
-        return sid
+        m["schema"] = m["schema"] or df.schema.json()
+        return self._add_snapshot(m, d, "append", meta, state_update)
 
     def overwrite(
         self,
@@ -237,21 +249,8 @@ class Table:
     ) -> int:
         m = self._load()
         d = self._write_dir(df, partition_by, coalesce)
-        sid = (m["current"] or 0) + 1
-        m["snapshots"].append(
-            {
-                "id": sid,
-                "parent": m["current"],
-                "dirs": [d],
-                "meta": {**(meta or {}), "op": "overwrite", "committed_at": time.time()},
-            }
-        )
-        m["current"] = sid
         m["schema"] = df.schema.json()
-        if state_update:
-            m.setdefault("state", {}).update(state_update)
-        self._commit(m)
-        return sid
+        return self._add_snapshot(m, d, "overwrite", meta, state_update)
 
     def register_dir(
         self,
@@ -268,26 +267,9 @@ class Table:
         re-run fully idempotent."""
         m = self._load()
         d = os.path.abspath(src_dir)
-        prev = m["current"]
-        prev_dirs = (
-            next(x for x in m["snapshots"] if x["id"] == prev)["dirs"] if prev is not None else []
-        )
-        sid = (prev or 0) + 1
-        m["snapshots"].append(
-            {
-                "id": sid,
-                "parent": prev,
-                "dirs": prev_dirs + [d],
-                "meta": {**(meta or {}), "op": "append", "committed_at": time.time()},
-            }
-        )
-        m["current"] = sid
         if read_drop:
             m["read_drop"] = sorted(set(m.get("read_drop") or []) | set(read_drop))
-        if state_update:
-            m.setdefault("state", {}).update(state_update)
-        self._commit(m)
-        return sid
+        return self._add_snapshot(m, d, "append", meta, state_update)
 
     def append_rows(
         self,
@@ -312,31 +294,8 @@ class Table:
         d = f"data-{uuid.uuid4().hex[:12]}"
         os.makedirs(os.path.join(self.path, d), exist_ok=True)
         pq.write_table(rows, os.path.join(self.path, d, "part-00000.parquet"))
-        prev = m["current"]
-        prev_dirs = (
-            next(x for x in m["snapshots"] if x["id"] == prev)["dirs"] if prev is not None else []
-        )
-        sid = (prev or 0) + 1
-        m["snapshots"].append(
-            {
-                "id": sid,
-                "parent": prev,
-                "dirs": prev_dirs + [d],
-                "meta": {**(meta or {}), "op": "append", "committed_at": time.time()},
-            }
-        )
-        m["current"] = sid
-        m["schema"] = schema.json() if m["schema"] is None else m["schema"]
-        if state_update:
-            m.setdefault("state", {}).update(state_update)
-        self._commit(m)
-        return sid
-
-    def set_schema_from(self, df: DataFrame) -> None:
-        m = self._load()
-        if m["schema"] is None:
-            m["schema"] = df.schema.json()
-            self._commit(m)
+        m["schema"] = m["schema"] or schema.json()
+        return self._add_snapshot(m, d, "append", meta, state_update)
 
     def set_state(self, **kv) -> None:
         m = self._load()

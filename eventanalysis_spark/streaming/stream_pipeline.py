@@ -15,7 +15,7 @@ is the `readStream` shape for continuous sources:
 An epoch is committed by the batch pipeline's own code: the wide pass,
 the staged write, the sink, quarantine, observation, aggregate and
 lineage commits, dim growth and the state commit, which also records the
-epoch id so a replayed epoch commits nothing. A stream and a batch run
+stream's query id and epoch id so a replayed epoch commits nothing. A stream and a batch run
 over the same pages leave the same warehouse tables; only source wiring
 differs.
 """
@@ -52,8 +52,10 @@ def start_routing_stream(
     default_sink: str = datagen.DEFAULT_SINK,
 ):
     """foreachBatch router: each epoch is committed by
-    `Pipeline.run_epoch` into `warehouse` — exactly-once via the epoch id
-    in the pipeline state + checkpoint offsets.
+    `Pipeline.run_epoch` into `warehouse` — exactly-once via the
+    checkpoint offsets + the (query id, epoch id) in the pipeline state.
+    The query id is stable across restarts of one checkpoint, so streams
+    with different checkpoints can share a warehouse.
 
     Epochs enrich with the warehouse's dims as of that epoch (a host or
     lang an epoch discovers gets its id from the next epoch on) and route
@@ -62,10 +64,16 @@ def start_routing_stream(
     `default_sink`, which the warehouse does not store: pass the batch
     pipeline's `PipelineConfig.default_sink`."""
     pipe = Pipeline(spark, PipelineConfig(warehouse=warehouse, default_sink=default_sink))
+    sc = spark.sparkContext
+
+    def commit_epoch(epoch: DataFrame, epoch_id: int) -> None:
+        # Spark sets the query id on the thread that runs the epoch
+        pipe.run_epoch(epoch, epoch_id, sc.getLocalProperty("sql.streaming.queryId"))
+
     writer = (
         read_pages_stream(spark, source_path, max_files_per_trigger)
         .writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(pipe.run_epoch)
+        .foreachBatch(commit_epoch)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

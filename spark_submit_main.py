@@ -88,27 +88,12 @@ def cmd_generate(args) -> int:
 
 
 def cmd_run(args) -> int:
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
+    from eventanalysis_spark.runner import update_cycle
 
-    spark = _spark(args)
-    pipe = Pipeline(
-        spark,
-        PipelineConfig(warehouse=args.warehouse, cap=args.cap, period=args.period),
+    return update_cycle(
+        _spark(args), args.source, args.warehouse,
+        cap=args.cap, repeat=args.repeat, period=args.period,
     )
-    src = spark.read.parquet(args.source)
-    results = (
-        pipe.run_until_exhausted(src)
-        if args.repeat
-        else [r for r in [pipe.run_batch(src)] if r is not None]
-    )
-    for r in results:
-        print(json.dumps({
-            "batch": r.batch_id, "n_input": r.n_input, "n_routed": r.n_routed,
-            "sinks": r.sink_counts, "docs_per_sec": round(r.docs_per_sec, 1),
-        }))
-    if not results:
-        print(json.dumps({"increment": 0}))
-    return 0
 
 
 def cmd_update(args) -> int:

@@ -271,7 +271,8 @@ def test_streaming_router_exactly_once(spark, pages_path, tmp_path):
     ).awaitTermination()
     assert snapshots() == before
     # an epoch id replayed after its commit commits nothing
-    assert stream.run_epoch(spark.read.parquet(pages_path), state["last_epoch"]) is None
+    ((query_id, last_epoch),) = state["last_epochs"].items()
+    assert stream.run_epoch(spark.read.parquet(pages_path), last_epoch, query_id) is None
     assert snapshots() == before
     assert stream.state_tbl.state() == state
     # batch/stream parity: one uncapped batch over the same pages
@@ -329,6 +330,44 @@ def test_stream_epochs_grow_dims(spark, pages_path, tmp_path):
             else:
                 first_seen[r.host] = k
     assert late_new_hosts > 0
+
+
+def test_two_streams_into_one_warehouse(spark, pages_pdf, tmp_path):
+    """Spark numbers epochs per checkpoint from 0, so the replay guard is
+    kept per stream: a second stream (new checkpoint) into a warehouse
+    ingests its epoch 0 after the first stream's epoch 0, and a restart of
+    the first stream that replays its committed epoch 0 (crash between the
+    pipeline commit and the checkpoint commit) adds no snapshot."""
+    import shutil
+
+    from eventanalysis_spark.pipeline import QUARANTINE_TABLE, Pipeline, PipelineConfig
+    from eventanalysis_spark.streaming.stream_pipeline import start_routing_stream
+
+    half = len(pages_pdf) // 2
+    srcs = []
+    for name, pdf in (("a", pages_pdf[:half]), ("b", pages_pdf[half:])):
+        srcs.append(str(tmp_path / f"src_{name}"))
+        spark.createDataFrame(pdf).coalesce(1).write.parquet(srcs[-1])
+    wh_path = str(tmp_path / "wh")
+    ckpts = [str(tmp_path / "ckpt_a"), str(tmp_path / "ckpt_b")]
+    for src, ckpt in zip(srcs, ckpts):
+        start_routing_stream(spark, src, wh_path, ckpt).awaitTermination()
+    pipe = Pipeline(spark, PipelineConfig(warehouse=wh_path))
+    assert pipe.state_tbl.state()["n_batches"] == 2
+    tables = [f"sink_{s}" for s in ("content", "commerce", "security", "misc")]
+    ingested = set()
+    for t in tables + [QUARANTINE_TABLE]:
+        ingested |= _urls(pipe.wh.table(t).read(spark))
+    assert ingested == set(pages_pdf["url"])
+
+    def snapshots():
+        return {t: len(pipe.wh.table(t).snapshots()) for t in pipe.wh.tables()}
+
+    before = snapshots()
+    shutil.rmtree(os.path.join(ckpts[0], "commits"))  # epoch 0 replays
+    start_routing_stream(spark, srcs[0], wh_path, ckpts[0]).awaitTermination()
+    assert os.path.exists(os.path.join(ckpts[0], "commits", "0"))
+    assert snapshots() == before
 
 
 def test_streaming_router_uses_warehouse_dims_and_rules(spark, pages_path, tmp_path):

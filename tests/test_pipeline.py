@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from eventanalysis_spark import pipeline
 from eventanalysis_spark.pipeline import Pipeline, PipelineConfig, wide_pass
 
 
@@ -123,16 +124,44 @@ def test_observation_counts_include_dropped(spark, pages, wh):
     assert obs.agg(F.sum("n_routed")).collect()[0][0] == r.n_routed
 
 
+def _lineage_by_sink(p):
+    return {
+        x["sink"]: x["n"]
+        for x in p.wh.table("lineage").read(p.spark)
+        .groupBy("sink").agg(F.sum("rows").alias("n")).collect()
+    }
+
+
 def test_lineage_and_metrics_sidecars(spark, pages, wh):
-    p = _mk(spark, wh, cap=None)
+    """Each batch writes its per-partition lineage to the 'lineage' table,
+    keyed by the batch id its sink commits record: per-sink sums equal the
+    batch's sink counts, the partition grain survives, and a resume after
+    the sinks committed adds no row. The metrics sidecar carries
+    throughput and stage laps."""
+    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=None, repartition=4))
     r = p.run_batch(pages)
-    # sink commit metadata carries per-partition lineage
+    assert r is not None
     snap = p.wh.table("sink_content").current_snapshot()
     assert snap.meta["batch"] == "b000001"
     assert snap.meta["rows"] == r.sink_counts["content"]
-    lineage = snap.meta["lineage"]
-    assert sum(x["rows"] for x in lineage) == r.sink_counts["content"]
-    assert all("ts_min" in x and "ts_max" in x for x in lineage)
+
+    lin = p.wh.table("lineage").read(spark)
+    assert dict(lin.dtypes) == {
+        "sink": "string", "part_id": "int", "rows": "bigint", "ts_min": "string",
+        "ts_max": "string", "bytes": "bigint", "batch_id": "string",
+    }
+    assert lin.agg(F.sum("rows")).collect()[0][0] == r.n_input
+    by_sink = _lineage_by_sink(p)
+    for s, n in r.sink_counts.items():
+        assert by_sink[s] == n, s
+    # the partition grain survived (all 4 repartition tasks present)
+    assert lin.select("part_id").distinct().count() == 4
+    assert lin.where(F.col("ts_min").isNull() | F.col("ts_max").isNull()).count() == 0
+    assert {x.batch_id for x in lin.select("batch_id").distinct().collect()} == {
+        r.batch_id
+    }
+    n_lineage_rows = lin.count()
+
     # metrics sidecar exists and carries throughput + stage laps
     mdir = os.path.join(p.state_tbl.path, "_metrics")
     files = os.listdir(mdir)
@@ -142,6 +171,12 @@ def test_lineage_and_metrics_sidecars(spark, pages, wh):
     assert set(payload["stage_seconds"]) >= {
         "discover_dims", "parse_route_write", "observe", "fan_out", "aggregate"
     }
+
+    # crash-after-sinks-committed resume must not duplicate lineage rows
+    p.state_tbl.set_state(wm_ts=None, wm_url=None, n_batches=0, last_batch=None)
+    r2 = p.run_batch(pages)
+    assert r2 is not None and r2.batch_id == r.batch_id
+    assert p.wh.table("lineage").read(spark).count() == n_lineage_rows
 
 
 def test_reserved_sink_names_rejected(spark, wh):
@@ -189,13 +224,14 @@ def test_drop_reason_only_in_quarantine(spark, pages, wh):
     assert q.where(F.col("drop_reason").isNull()).count() == 0
 
 
-def test_dim_spill_switches_to_table_path(spark, pages, wh):
-    """Once the host dim outgrows dim_cache_limit the pipeline must flip
+def test_dim_spill_switches_to_table_path(spark, pages, wh, monkeypatch):
+    """Once the host dim outgrows DIM_CACHE_LIMIT the pipeline must flip
     permanently to the table-based anti-join path (distributed discovery,
     append-only growth, no driver cache) with sequential-id CONTINUITY
     across the switch — and a fresh Pipeline on the same warehouse must
-    come up already spilled."""
-    cfg = PipelineConfig(warehouse=wh, cap=1000, dim_cache_limit=5)
+    come up already spilled. Its stats equal a cached-dims run's."""
+    monkeypatch.setattr(pipeline, "DIM_CACHE_LIMIT", 5)
+    cfg = PipelineConfig(warehouse=wh, cap=1000)
     p = Pipeline(spark, cfg)
     results = p.run_until_exhausted(pages)
     assert len(results) == 3
@@ -211,13 +247,20 @@ def test_dim_spill_switches_to_table_path(spark, pages, wh):
     p2 = Pipeline(spark, cfg)
     assert p2._dims_spilled is True
     assert p2.run_batch(pages) is None
-    # parity: same routed rows as an unspilled run
+    # parity: same routed rows and stats as an unspilled run
+    monkeypatch.undo()
     q = _mk(spark, wh + "_ref", cap=1000)
     q.run_until_exhausted(pages)
+    assert q._dims_spilled is False
     for s in ["content", "commerce", "security", "misc"]:
         a = {x.url for x in p.sink_table(s).select("url").collect()}
         b = {x.url for x in q.sink_table(s).select("url").collect()}
         assert a == b, s
+    assert p.total_sink_aggregates().toPandas().equals(
+        q.total_sink_aggregates().toPandas()
+    )
+    assert _obs_totals(p) == _obs_totals(q)
+    assert _lineage_by_sink(p) == _lineage_by_sink(q)
 
 
 def test_hot_host_salting_learns_and_spreads(spark, pages, wh):
@@ -314,40 +357,6 @@ def test_warehouse_maintain_compacts_and_preserves(spark, pages, tmp_path):
     # pipeline state (watermark, batch count) untouched by maintenance
     p2 = _mk(spark, wh_path, cap=1100)
     assert p2.run_batch(pages) is None  # still exhausted, resume intact
-
-
-def test_lineage_spills_to_table_above_inline_max(spark, pages, wh):
-    """Web-scale lineage path: above lineage_inline_max staged files the
-    per-partition lineage is written distributedly to the 'lineage' table
-    (driver never holds per-partition rows) and sink commits carry a
-    pointer. Totals, per-sink counts, and resume idempotence all hold."""
-    p = Pipeline(
-        spark,
-        PipelineConfig(warehouse=wh, cap=None, lineage_inline_max=2, repartition=4),
-    )
-    r = p.run_batch(pages)
-    assert r is not None
-    snap = p.wh.table("sink_content").current_snapshot()
-    assert snap.meta["lineage"] == []  # not inlined in manifest JSON
-    assert snap.meta["lineage_ref"] == {"table": "lineage", "batch": r.batch_id}
-
-    lin = p.wh.table("lineage").read(spark)
-    assert lin.agg(F.sum("rows")).collect()[0][0] == r.n_input
-    by_sink = {
-        x["sink"]: x["n"]
-        for x in lin.groupBy("sink").agg(F.sum("rows").alias("n")).collect()
-    }
-    for s, n in r.sink_counts.items():
-        assert by_sink[s] == n, s
-    # the partition grain survived (all 4 repartition tasks present)
-    assert lin.select("part_id").distinct().count() == 4
-    n_lineage_rows = lin.count()
-
-    # crash-after-sinks-committed resume must not duplicate lineage rows
-    p.state_tbl.set_state(wm_ts=None, wm_url=None, n_batches=0, last_batch=None)
-    r2 = p.run_batch(pages)
-    assert r2 is not None and r2.batch_id == r.batch_id
-    assert p.wh.table("lineage").read(spark).count() == n_lineage_rows
 
 
 def test_batch_job_counts_in_sidecar(spark, pages, wh):

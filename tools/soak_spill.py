@@ -1,14 +1,12 @@
-"""Soak the SPILLED paths at bench scale: run the same multi-batch
+"""Soak the SPILLED dims path at bench scale: run the same multi-batch
 run_until_exhausted drain twice — once with the default driver-side dim
-cache + inline lineage, once with dim_cache_limit=0 (host dim forced to
-the warehouse-table path from batch 1) and lineage_inline_max=0 (per-
-partition lineage forced to the distributed lineage table) — and report
-throughput for both plus the ratio.
+cache, once with pipeline.DIM_CACHE_LIMIT=0 (host dim forced to the
+warehouse-table path from batch 1) — and report throughput for both plus
+the ratio.
 
-The spill paths are what a REAL 100 TB run would exercise (10^8 hosts
-don't fit in a driver dict; 10^5 staged files per batch can't be inline
-JSON), so "within ~10% of the cached-dim drain" is the pass bar that
-proves the scale path isn't a hidden 2x regression.
+The spilled path is what a REAL 100 TB run would exercise (10^8 hosts
+don't fit in a driver dict), so "within ~10% of the cached-dim drain" is
+the pass bar that proves the scale path isn't a hidden 2x regression.
 
 Usage: python tools/soak_spill.py [docs] [cap]   (defaults 800000 200000)
 """
@@ -26,20 +24,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BENCH_ROOT = os.environ.get("SPARK_GRAFT_BENCH_ROOT", "/tmp/ea-bench")
 
 
-def drain(spark, pages: str, docs: int, cap: int, **cfg_overrides) -> dict:
+def drain(spark, pages: str, docs: int, cap: int, dim_cache_limit: int | None = None) -> dict:
+    from eventanalysis_spark import pipeline
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
     wh = os.path.join(BENCH_ROOT, f"soak-wh-{time.time_ns()}")
     src = spark.read.parquet(pages)
-    pipe = Pipeline(
-        spark, PipelineConfig(warehouse=wh, cap=cap, **cfg_overrides)
-    )
-    t0 = time.perf_counter()
-    n_batches, n_docs = 0, 0
-    for r in pipe.run_until_exhausted(src):
-        n_batches += 1
-        n_docs += r.n_input
-    dt = time.perf_counter() - t0
+    default_limit = pipeline.DIM_CACHE_LIMIT
+    if dim_cache_limit is not None:
+        pipeline.DIM_CACHE_LIMIT = dim_cache_limit
+    try:
+        pipe = Pipeline(spark, PipelineConfig(warehouse=wh, cap=cap))
+        t0 = time.perf_counter()
+        n_batches, n_docs = 0, 0
+        for r in pipe.run_until_exhausted(src):
+            n_batches += 1
+            n_docs += r.n_input
+        dt = time.perf_counter() - t0
+    finally:
+        pipeline.DIM_CACHE_LIMIT = default_limit
     shutil.rmtree(wh, ignore_errors=True)
     return {
         "seconds": round(dt, 2),
@@ -73,16 +76,15 @@ def main() -> None:
     rounds = int(os.environ.get("SPARK_GRAFT_SOAK_ROUNDS", "2"))
     for _ in range(rounds):
         c = drain(spark, pages, docs, cap)
-        s = drain(spark, pages, docs, cap,
-                  dim_cache_limit=0, lineage_inline_max=0)
+        s = drain(spark, pages, docs, cap, dim_cache_limit=0)
         if cached["seconds"] is None or c["seconds"] < cached["seconds"]:
             cached = c
         if spilled["seconds"] is None or s["seconds"] < spilled["seconds"]:
             spilled = s
     out = {
         "docs": docs, "cap": cap, "cpus": cpus,
-        "cached_dim_inline_lineage": cached,
-        "spilled_dim_spilled_lineage": spilled,
+        "cached_dim": cached,
+        "spilled_dim": spilled,
         "spill_over_cached_ratio": round(
             spilled["seconds"] / cached["seconds"], 3
         ),
