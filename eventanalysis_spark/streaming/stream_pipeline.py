@@ -15,9 +15,9 @@ is the `readStream` shape for continuous sources:
 An epoch is committed by the batch pipeline's own code: the wide pass,
 the staged write, the sink, quarantine, observation, aggregate and
 lineage commits, dim growth and the state commit, which also records the
-stream's query id and epoch id so a replayed epoch commits nothing. A stream and a batch run
-over the same pages leave the same warehouse tables; only source wiring
-differs.
+stream's query id and epoch id so a replayed epoch commits nothing. A
+stream and a batch run over the same pages leave the same warehouse
+tables; only source wiring differs.
 """
 
 from __future__ import annotations

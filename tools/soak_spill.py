@@ -24,15 +24,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BENCH_ROOT = os.environ.get("SPARK_GRAFT_BENCH_ROOT", "/tmp/ea-bench")
 
 
-def drain(spark, pages: str, docs: int, cap: int, dim_cache_limit: int | None = None) -> dict:
+def drain(spark, pages: str, docs: int, cap: int, cache_limit: int | None = None) -> dict:
     from eventanalysis_spark import pipeline
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
     wh = os.path.join(BENCH_ROOT, f"soak-wh-{time.time_ns()}")
     src = spark.read.parquet(pages)
     default_limit = pipeline.DIM_CACHE_LIMIT
-    if dim_cache_limit is not None:
-        pipeline.DIM_CACHE_LIMIT = dim_cache_limit
+    if cache_limit is not None:
+        pipeline.DIM_CACHE_LIMIT = cache_limit
     try:
         pipe = Pipeline(spark, PipelineConfig(warehouse=wh, cap=cap))
         t0 = time.perf_counter()
@@ -76,7 +76,7 @@ def main() -> None:
     rounds = int(os.environ.get("SPARK_GRAFT_SOAK_ROUNDS", "2"))
     for _ in range(rounds):
         c = drain(spark, pages, docs, cap)
-        s = drain(spark, pages, docs, cap, dim_cache_limit=0)
+        s = drain(spark, pages, docs, cap, cache_limit=0)
         if cached["seconds"] is None or c["seconds"] < cached["seconds"]:
             cached = c
         if spilled["seconds"] is None or s["seconds"] < spilled["seconds"]:
