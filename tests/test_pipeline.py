@@ -134,10 +134,9 @@ def _lineage_by_sink(p):
 
 def test_lineage_and_metrics_sidecars(spark, pages, wh):
     """Each batch writes its per-partition lineage to the 'lineage' table,
-    keyed by the batch id its sink commits record: per-sink sums equal the
-    batch's sink counts, the partition grain survives, and a resume after
-    the sinks committed adds no row. The metrics sidecar carries
-    throughput and stage laps."""
+    keyed by the batch id its sink commits record, with the table's fixed
+    schema and no null timestamps. The metrics sidecar carries throughput
+    and stage laps."""
     p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=None, repartition=4))
     r = p.run_batch(pages)
     assert r is not None
@@ -150,17 +149,10 @@ def test_lineage_and_metrics_sidecars(spark, pages, wh):
         "sink": "string", "part_id": "int", "rows": "bigint", "ts_min": "string",
         "ts_max": "string", "bytes": "bigint", "batch_id": "string",
     }
-    assert lin.agg(F.sum("rows")).collect()[0][0] == r.n_input
-    by_sink = _lineage_by_sink(p)
-    for s, n in r.sink_counts.items():
-        assert by_sink[s] == n, s
-    # the partition grain survived (all 4 repartition tasks present)
-    assert lin.select("part_id").distinct().count() == 4
     assert lin.where(F.col("ts_min").isNull() | F.col("ts_max").isNull()).count() == 0
     assert {x.batch_id for x in lin.select("batch_id").distinct().collect()} == {
         r.batch_id
     }
-    n_lineage_rows = lin.count()
 
     # metrics sidecar exists and carries throughput + stage laps
     mdir = os.path.join(p.state_tbl.path, "_metrics")
@@ -171,6 +163,27 @@ def test_lineage_and_metrics_sidecars(spark, pages, wh):
     assert set(payload["stage_seconds"]) >= {
         "discover_dims", "parse_route_write", "observe", "fan_out", "aggregate"
     }
+
+
+def test_lineage_spills_to_table_above_inline_max(spark, pages, wh):
+    """There is no inline lineage threshold any more: whatever the number of
+    staged files, the per-partition lineage goes to the 'lineage' table and
+    sink commits carry neither an inline list nor a pointer. Totals,
+    per-sink counts, the partition grain and resume idempotence all hold."""
+    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=None, repartition=4))
+    r = p.run_batch(pages)
+    assert r is not None
+    snap = p.wh.table("sink_content").current_snapshot()
+    assert "lineage" not in snap.meta and "lineage_ref" not in snap.meta
+
+    lin = p.wh.table("lineage").read(spark)
+    assert lin.agg(F.sum("rows")).collect()[0][0] == r.n_input
+    by_sink = _lineage_by_sink(p)
+    for s, n in r.sink_counts.items():
+        assert by_sink[s] == n, s
+    # the partition grain survived (all 4 repartition tasks present)
+    assert lin.select("part_id").distinct().count() == 4
+    n_lineage_rows = lin.count()
 
     # crash-after-sinks-committed resume must not duplicate lineage rows
     p.state_tbl.set_state(wm_ts=None, wm_url=None, n_batches=0, last_batch=None)
