@@ -10,7 +10,7 @@ That property is what makes the byte-identical-text invariant testable and
 what lets the generator scale to bench sizes without a driver bottleneck.
 
 Fixture contract follows FIXTURES.md §1: Zipf-ish hosts with ≥2 hot hosts
-(salting exercise), ≥3 calendar months and non-unique timestamps
+(skew exercise), ≥3 calendar months and non-unique timestamps
 (archive-window exercise, reference ArchiveBuilder.cs:145-148), control
 chars 0x01-0x1F in some html (FixXml repair path, XmlUtilities.cs:28-58),
 empty-vs-null title distinction (XmlStringValueConversions.cs:99-106),
@@ -22,6 +22,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from eventanalysis_spark.operators.route import DEFAULT_SINK
+
 _MASK = (1 << 64) - 1
 _GOLDEN = 0x9E3779B97F4A7C15
 
@@ -30,7 +32,7 @@ DEFAULT_SEED = 42
 # ---- closed vocabularies -------------------------------------------------
 
 HOSTS = [
-    # two deliberately hot hosts first (skew / salting exercise)
+    # two deliberately hot hosts first (skew exercise)
     "pages.hothost-alpha.com",
     "cdn.hothost-beta.net",
     "www.example.org",
@@ -294,5 +296,4 @@ def route_rules_df(spark):
         "event_class string, min_version int, enabled boolean, sink string",
     )
 
-DEFAULT_SINK = "misc"
 SINKS = ["content", "commerce", "security", DEFAULT_SINK]

@@ -16,12 +16,6 @@ from pyspark.sql import functions as F
 from eventanalysis_spark.functions.scalars import period_key
 
 
-def class_counts(fact: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """A1: GROUP BY keys ORDER BY keys count (RawEventDbV1.cs:196-203)."""
-    keys = keys or ["event_class"]
-    return fact.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).orderBy(*keys)
-
-
 def overview(
     fact: DataFrame,
     host_info: DataFrame | None = None,
@@ -58,15 +52,6 @@ def group_stats(fact: DataFrame, keys: list[str],
             F.avg(bytes_col).alias("avg_bytes"),
         )
         .orderBy(*keys)
-    )
-
-
-def watermark_bounds(fact: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
-    """A4: scalar min/max watermark probe (OpenDbV2.cs:108-123)."""
-    return fact.agg(
-        F.min(ts_col).alias("ts_min"),
-        F.max(ts_col).alias("ts_max"),
-        F.count(F.lit(1)).alias("n"),
     )
 
 

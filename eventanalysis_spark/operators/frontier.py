@@ -12,8 +12,8 @@ Spark-first shape: ONE window keyed by host (rank within host by
 priority desc, then url for determinism), then pure arithmetic — slot =
 floor(rank / per_host_slots). No joins, no second shuffle; the slot
 assignment is embarrassingly host-parallel. Hot-host skew is bounded by
-`max_per_host` BEFORE any downstream work (the same learn-and-spread
-philosophy as operators/skew.py, but here the cap IS the semantics).
+`max_per_host` BEFORE any downstream work (here the cap IS the
+semantics).
 
 Reference parity note: the reference engine has no crawler; this module
 belongs to the training-data-pipeline surface the mission brief makes

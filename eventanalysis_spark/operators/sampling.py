@@ -111,7 +111,7 @@ def quota_sample(
     sort per group, not a global sort. A stratum so hot it swamps one
     reducer is exactly the hot-host case: pre-filter with
     stratified_sample (rate ≈ quota/|stratum| upper bound) to shrink the
-    shuffled volume, or salt via operators/skew.py."""
+    shuffled volume."""
     strata_cols = strata_cols or [c for c in quotas.columns if c != "quota"]
     q = quotas.select(
         *[F.col(c).alias(f"__s_{c}") for c in strata_cols],

@@ -28,11 +28,11 @@ Scale design (100 TB / 1000 executors):
     aggregate scan of that staged data instead of re-running the UDF or
     caching the wide frame. While the dims fit the driver cache, that
     aggregate is one Arrow collect, and the per-partition lineage,
-    observations, dim discovery, hot hosts and the per-sink aggregate
-    are pyarrow roll-ups of it committed from the driver (no Spark job).
-    Past the dim ceiling the driver collects it without the host key,
-    and only the host-grain outputs (host growth, hot hosts, the per-sink
-    aggregate) stay distributed;
+    observations, dim discovery and the per-sink aggregate are pyarrow
+    roll-ups of it committed from the driver (no Spark job). Past the dim
+    ceiling the driver collects it without the host key, and only the
+    host-grain outputs (host growth, the per-sink aggregate) stay
+    distributed;
   - a capped batch is a bound job, the shuffle of its selected rows, the
     write job and the stats collect;
     a call that finds the source exhausted runs only the bound job;
@@ -42,11 +42,10 @@ Scale design (100 TB / 1000 executors):
   - a capped batch runs one wide-pass task per ROWS_PER_TASK rows (a
     round-robin shuffle of the selected rows; the scan stays parallel),
     since each task has a fixed Python-worker and writer cost; a batch one
-    task wrote is stats-scanned in one task with no shuffle; with
-    `repartition` set, the batch is instead repartitioned
-    by xxhash64(url) — uniform by construction (the north rule's
-    hashed-url partitioning) — with explicit hot-host salting
-    (operators/skew.py) on top of map-side partial aggregation;
+    task wrote is stats-scanned in one task with no shuffle. The
+    round-robin spreads rows, not keys, so no hot host can pin a writer:
+    write tasks differ by at most one row per scan partition. An uncapped
+    batch runs as scanned and a stream epoch as delivered;
   - resume: the watermark commits atomically with data; re-running a
     half-committed batch skips sinks that already recorded the batch_id
     (idempotent), then advances — crash-safe exactly-once overall.
@@ -55,7 +54,6 @@ Scale design (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import time
 from dataclasses import dataclass, field
@@ -72,7 +70,7 @@ from eventanalysis_spark.functions.scalars import period_key
 from eventanalysis_spark.metrics import JobGroup, StageTimer, write_metrics_sidecar
 from eventanalysis_spark.operators.enrich import enrich_pages
 from eventanalysis_spark.operators.parse import parse_pages_fused
-from eventanalysis_spark.operators.route import route_by, rule_lookup
+from eventanalysis_spark.operators.route import DEFAULT_SINK, route_by, rule_lookup
 from eventanalysis_spark.sources.catalog import Warehouse
 from eventanalysis_spark.sources.incremental import (
     Watermark,
@@ -80,6 +78,7 @@ from eventanalysis_spark.sources.incremental import (
     max_key,
     next_batch,
 )
+from eventanalysis_spark.sources.zone import NAME_RE
 
 SINK_PREFIX = "sink_"
 QUARANTINE = "__quarantine"
@@ -93,8 +92,6 @@ RESERVED_TABLES = frozenset(
     {"_pipeline", "dim_host", "dim_lang", "route_rules",
      "sink_agg", "observations", "lineage", QUARANTINE_TABLE}
 )
-# sink names follow the reference's job-name grammar (EventJobConfig.cs:58)
-_SINK_NAME_RE = re.compile(r"^[a-z][a-z0-9]*([-_][a-z0-9]+)*$")
 
 # fixed schemas of the driver-cached dims (local relations and
 # Table.append_rows growth commits); must match the bootstrap DataFrames
@@ -198,7 +195,7 @@ def wide_pass(
     host_info: DataFrame,
     lang_info: DataFrame,
     rule: Column,
-    default_sink: str = datagen.DEFAULT_SINK,
+    default_sink: str = DEFAULT_SINK,
     broadcast_host: bool = True,
 ) -> DataFrame:
     """The transformation graph shared by the batch pipeline and the
@@ -219,7 +216,7 @@ def wide_pass(
 
 def validate_sink_name(sink: str) -> None:
     """Reject sinks that are malformed or would shadow an internal table."""
-    if not isinstance(sink, str) or not _SINK_NAME_RE.match(sink):
+    if not isinstance(sink, str) or not NAME_RE.match(sink):
         raise ValueError(
             f"invalid sink name {sink!r}: must match "
             "^[a-z][a-z0-9]*([-_][a-z0-9]+)*$ (EventJobConfig.cs:58)"
@@ -236,13 +233,7 @@ class PipelineConfig:
     warehouse: str
     cap: int | None = 20000
     period: str = "day"
-    default_sink: str = datagen.DEFAULT_SINK
-    salt_threshold: float = 0.05
-    salt_n: int = 16
-    # xxhash64(url) partitions of every batch. None: a capped batch runs
-    # ceil(rows / incremental.ROWS_PER_TASK) tasks, an uncapped one runs
-    # as scanned
-    repartition: int | None = None
+    default_sink: str = DEFAULT_SINK
 
 
 @dataclass
@@ -294,9 +285,6 @@ class Pipeline:
             else [r.asDict() for r in self.host_tbl.read(spark).collect()]
         )
         self._lang_rows = [r.asDict() for r in self.lang_tbl.read(spark).collect()]
-        # hot hosts learned from the previous batch's aggregate (committed
-        # with the watermark, so resume keeps the salting decision)
-        self._hot_hosts: list[str] = list(self.state_tbl.state().get("hot_hosts", []))
         # validate the rule table up front (rules are user input): every
         # sink name must be legal, and no two rules may claim the same
         # event class — the router broadcast-joins on event_class, so a
@@ -448,23 +436,6 @@ class Pipeline:
             batch = next_batch(_keyed(source), wm, self.cfg.cap)
             if batch is None:  # capped bound found nothing above the watermark
                 return self._exhausted(batch_id, timer, jobs)
-            if self.cfg.repartition:
-                # Explicit batch partitioning (the north rule's hashed-url +
-                # hot-host salting). Host-keyed partitioning co-locates each
-                # host's pages; hosts the PREVIOUS batch's aggregate showed
-                # above salt_threshold of batch volume get a url-hash salt in
-                # [0, salt_n) so no single reducer owns a hot host. First
-                # batch (no learned hot set yet) partitions by pure url hash —
-                # uniform by construction.
-                host_e = F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
-                if self._hot_hosts:
-                    salt = F.when(
-                        host_e.isin(self._hot_hosts),
-                        F.pmod(F.xxhash64("url"), F.lit(self.cfg.salt_n)),
-                    ).otherwise(F.lit(0))
-                    batch = batch.repartition(self.cfg.repartition, host_e, salt)
-                else:
-                    batch = batch.repartition(self.cfg.repartition, F.xxhash64("url"))
             return self._commit(batch, batch_id, wm, timer, jobs)
 
     def run_epoch(
@@ -588,7 +559,6 @@ class Pipeline:
                 .agg(*_rollup_stats()).toArrow()
             )
         n_input = pc.sum(fine["n"]).as_py() or 0
-        hot_thr = self.cfg.salt_threshold * max(n_input, 1)
 
         # resume (write skipped, no Observation): one narrow 2-column scan
         if wm_bound_row is None:
@@ -675,31 +645,20 @@ class Pipeline:
                     meta=meta, state_update=guard,
                 )
 
-        # dimension discovery + hot-host detection from the same grain
-        # (no extra scan, and on resume no read-back); new dim keys get
-        # their ids here, so they attach to facts from the NEXT batch on
+        # dimension discovery from the same grain (no extra scan, and on
+        # resume no read-back); new dim keys get their ids here, so they
+        # attach to facts from the NEXT batch on
         langs = set(pc.unique(fine["lang"]).drop_null().to_pylist())
         if fine_grain is None:
-            hosts = _rollup(fine, ["host"], [("n", "sum")])
-            n_new_hosts, n_new_langs = self._grow_dims(
-                set(hosts["host"].drop_null().to_pylist()), langs, batch_id
-            )
-            hot = hosts.filter(pc.greater_equal(hosts["n"], hot_thr))
-            self._hot_hosts = sorted(hot["host"].drop_null().to_pylist())
+            hosts = set(pc.unique(fine["host"]).drop_null().to_pylist())
+            n_new_hosts, n_new_langs = self._grow_dims(hosts, langs, batch_id)
         else:
-            # table path: hosts never touch the driver — hot candidates
-            # are filtered to >= threshold (≤ 1/salt_threshold rows by
-            # construction)
+            # table path: hosts never touch the driver
             batch_hosts = fine_grain.select("host").where(
                 F.col("host").isNotNull()
             ).distinct()
             n_new_hosts = self._grow_hosts_table(batch_hosts, batch_id)
             _, n_new_langs = self._grow_dims(set(), langs, batch_id)
-            hot = (
-                fine_grain.groupBy("host").agg(F.sum("n").alias("n"))
-                .where(F.col("n") >= F.lit(hot_thr)).collect()
-            )
-            self._hot_hosts = sorted(r["host"] for r in hot if r["host"])
             fine_grain.unpersist()
 
         # -- advance watermark (the overall batch commit point)
@@ -711,8 +670,7 @@ class Pipeline:
         }
         self.state_tbl.set_state(
             **new_wm.to_state(), n_batches=state.get("n_batches", 0) + 1,
-            last_batch=batch_id, hot_hosts=self._hot_hosts,
-            dims_spilled=self._dims_spilled, **epochs,
+            last_batch=batch_id, dims_spilled=self._dims_spilled, **epochs,
         )
         lap()
 

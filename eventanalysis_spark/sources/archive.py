@@ -10,7 +10,8 @@ Spark-first: a month of pages is a time-partition materialization —
 `where(month window)` → sorted parquet snapshot + JSON metadata sidecar;
 completeness gating compares the month end against the source watermark
 (event-time semantics, not file order); purge is a row-level delete on the
-warehouse table; vacuum is compact()+expire_snapshots().
+warehouse table; space is reclaimed by Warehouse.maintain
+(compact + expire_snapshots).
 """
 
 from __future__ import annotations
@@ -159,8 +160,3 @@ def purge_archived(
             purged += 1
     return purged
 
-
-def vacuum(spark: SparkSession, table: Table, keep_last: int = 1) -> int:
-    """S12: compact + expire — space reclamation after purge."""
-    table.compact(spark)
-    return table.expire_snapshots(keep_last=keep_last)

@@ -141,9 +141,10 @@ def export_samples(
     rows = k_spread_sample(df, k, predicate).collect()
     paths = []
     ext = "xml" if fmt == "xml" else "txt"
-    for r in rows:
+    for i, r in enumerate(rows):
+        # the index keeps names unique; the url part is only a readable hint
         safe = "".join(c if c.isalnum() else "_" for c in r["url"])[:120]
-        p = os.path.join(out_dir, f"sample-{safe}.{ext}")
+        p = os.path.join(out_dir, f"sample-{i:04d}-{safe}.{ext}")
         content = r[content_col]
         if isinstance(content, (bytes, bytearray)):
             content = content.decode("utf-8", errors="replace")

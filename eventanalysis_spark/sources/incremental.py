@@ -100,8 +100,9 @@ def next_batch(df: DataFrame, wm: Watermark, cap: int | None = 20000) -> DataFra
     shuffled into ceil(n / ROWS_PER_TASK) partitions: the scan and the
     filter keep one task per scan partition, and only the <= cap selected
     rows cross the shuffle (a coalesce would merge the scan itself into
-    those few tasks). A caller that repartitions the batch by expression
-    replaces this shuffle (Spark's CollapseRepartition drops it)."""
+    those few tasks). Round-robin deals rows, not keys, so the write tasks
+    differ by at most one row per scan partition, however skewed the
+    hosts."""
     inc = above_watermark(df, wm)
     if cap is None:
         return inc

@@ -30,9 +30,9 @@ from dataclasses import dataclass, field
 
 from eventanalysis_spark.sources.catalog import Warehouse
 
-# the reference's job-name grammar (EventJobConfig.cs:58) — shared with
-# pipeline.validate_sink_name
-_NAME_RE = re.compile(r"^[a-z][a-z0-9]*([-_][a-z0-9]+)*$")
+# the reference's job-name grammar (EventJobConfig.cs:58) — also the sink
+# name grammar of pipeline.validate_sink_name
+NAME_RE = re.compile(r"^[a-z][a-z0-9]*([-_][a-z0-9]+)*$")
 
 
 class ZoneConfigError(Exception):
@@ -57,7 +57,7 @@ class JobConfig:
     admin: dict = field(default_factory=dict)
 
     def validate(self) -> None:
-        if not isinstance(self.name, str) or not _NAME_RE.match(self.name):
+        if not isinstance(self.name, str) or not NAME_RE.match(self.name):
             raise RegistryError(
                 f"invalid job name {self.name!r}: must match "
                 "^[a-z][a-z0-9]*([-_][a-z0-9]+)*$ (EventJobConfig.cs:58)"

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventanalysis_spark import datagen
+from eventanalysis_spark.operators.route import DEFAULT_SINK
 from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
 PAGES_SCHEMA_DDL = datagen.PAGES_DDL
@@ -49,7 +50,7 @@ def start_routing_stream(
     checkpoint: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    default_sink: str = datagen.DEFAULT_SINK,
+    default_sink: str = DEFAULT_SINK,
 ):
     """foreachBatch router: each epoch is committed by
     `Pipeline.run_epoch` into `warehouse` — exactly-once via the

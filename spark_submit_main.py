@@ -78,6 +78,25 @@ def _spark(args):
     return get_spark("eventanalysis-spark", master=args.master)
 
 
+def _read_warehouse(args):
+    """The warehouse of a reporting verb, opened read-only: the verb
+    creates nothing on disk. None, after one JSON error line, when the path
+    holds no pipeline warehouse (no `_pipeline` table)."""
+    from eventanalysis_spark.sources.catalog import Warehouse
+
+    wh = Warehouse(args.warehouse, read_only=True)
+    if "_pipeline" not in wh.tables():
+        print(json.dumps({"error": "no pipeline warehouse", "path": args.warehouse}))
+        return None
+    return wh
+
+
+def _sink_df(spark, wh, sink: str):
+    from eventanalysis_spark.pipeline import SINK_PREFIX
+
+    return wh.table(f"{SINK_PREFIX}{sink}").read(spark)
+
+
 def cmd_generate(args) -> int:
     from eventanalysis_spark.datagen import write_pages
 
@@ -111,15 +130,16 @@ def cmd_update(args) -> int:
 
 
 def cmd_archive(args) -> int:
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.sources.archive import build_archive
+    from eventanalysis_spark.sources.incremental import Watermark
 
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
     spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
-    df = pipe.sink_table(args.sink)
-    wm = pipe.watermark()
+    wm = Watermark.from_state(wh.table("_pipeline").state())
     info = build_archive(
-        df, args.out, args.month, job=args.sink,
+        _sink_df(spark, wh, args.sink), args.out, args.month, job=args.sink,
         watermark_ts=wm.ts, allow_current=args.allow_current,
     )
     print(json.dumps(info.__dict__ if info else {"empty_month": args.month}))
@@ -422,11 +442,15 @@ def cmd_overview(args) -> int:
     """AppOverview/AppOverview2.fs analog: per (host, lang, event_class,
     ever) counts with dimension attributes, deterministic order."""
     from eventanalysis_spark.operators.aggregate import overview
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
     spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
-    df = overview(pipe.sink_table(args.sink), pipe._host_df(), pipe._lang_df())
+    df = overview(
+        _sink_df(spark, wh, args.sink),
+        wh.table("dim_host").read(spark), wh.table("dim_lang").read(spark),
+    )
     if args.out:
         from eventanalysis_spark.sources.exports import export_csv
 
@@ -441,11 +465,11 @@ def cmd_overview(args) -> int:
 def cmd_rollup(args) -> int:
     """AppDiag.fs analog: day / ISO-week / month rollup of a sink."""
     from eventanalysis_spark.operators.aggregate import period_rollup
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
 
-    spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
-    df = period_rollup(pipe.sink_table(args.sink), period=args.period)
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
+    df = period_rollup(_sink_df(_spark(args), wh, args.sink), period=args.period)
     for r in df.collect():
         print(json.dumps(r.asDict(), default=str))
     return 0
@@ -454,17 +478,17 @@ def cmd_rollup(args) -> int:
 def cmd_export(args) -> int:
     """AppDump.fs analog: filtered/ordered/limited header dump to CSV."""
     from eventanalysis_spark.operators.query import HeaderQuery, query_headers
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.sources.exports import export_csv
 
-    spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
     q = HeaderQuery(
         ts_min=args.ts_min, ts_max=args.ts_max,
         event_class=args.event_class, host=args.host, lang=args.lang,
         limit=args.limit, reverse=args.descending,
     )
-    df = query_headers(pipe.sink_table(args.sink), q)
+    df = query_headers(_sink_df(_spark(args), wh, args.sink), q)
     export_csv(df, args.out, single_file=args.limit is not None)
     print(json.dumps({"rows": df.count(), "out": args.out}))
     return 0
@@ -472,28 +496,32 @@ def cmd_export(args) -> int:
 
 def cmd_samples(args) -> int:
     """AppSamples.fs analog: evenly-spread k sample files from a sink."""
-    from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
     from eventanalysis_spark.sources.exports import export_samples
 
-    spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
     paths = export_samples(
-        pipe.sink_table(args.sink), args.out, k=args.k, fmt=args.fmt
+        _sink_df(_spark(args), wh, args.sink), args.out, k=args.k, fmt=args.fmt
     )
     print(json.dumps({"files": paths}))
     return 0
 
 
 def cmd_status(args) -> int:
-    from eventanalysis_spark.pipeline import SINK_PREFIX, Pipeline, PipelineConfig
+    from eventanalysis_spark.pipeline import SINK_PREFIX
+    from eventanalysis_spark.sources.incremental import Watermark
 
+    wh = _read_warehouse(args)
+    if wh is None:
+        return 1
     spark = _spark(args)
-    pipe = Pipeline(spark, PipelineConfig(warehouse=args.warehouse))
-    out = {"watermark": pipe.watermark().to_state(),
-           "state": pipe.state_tbl.state(), "sinks": {}}
-    for t in pipe.wh.tables():
+    state = wh.table("_pipeline").state()
+    out = {"watermark": Watermark.from_state(state).to_state(),
+           "state": state, "sinks": {}}
+    for t in wh.tables():
         if t.startswith(SINK_PREFIX) and t != "sink_agg":
-            out["sinks"][t[len(SINK_PREFIX):]] = pipe.wh.table(t).read(spark).count()
+            out["sinks"][t[len(SINK_PREFIX):]] = wh.table(t).read(spark).count()
     print(json.dumps(out, indent=1))
     return 0
 

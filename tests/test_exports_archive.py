@@ -22,7 +22,6 @@ from eventanalysis_spark.sources.archive import (
     month_slice,
     purge_archived,
     read_archive,
-    vacuum,
 )
 from eventanalysis_spark.sources.catalog import Warehouse
 from eventanalysis_spark.sources.exports import (
@@ -107,6 +106,20 @@ def test_export_samples(spark, parsed_full, tmp_path):
     assert len(paths) == 5
     content = open(paths[0]).read()
     assert content.startswith("url: https://")
+
+
+def test_export_samples_names_never_collide(spark, tmp_path):
+    """Two sampled urls that differ only in punctuation (or past the name's
+    url cut) are written to two files."""
+    df = spark.createDataFrame(
+        [("https://a.com/x-1", "2024-01-01 00:00:00", "one"),
+         ("https://a.com/x_1", "2024-01-01 00:00:01", "two")],
+        "url string, ts string, text_extracted string",
+    ).select("url", F.col("ts").cast("timestamp").alias("warc_ts"), "text_extracted")
+    paths = export_samples(df, str(tmp_path / "samples"), k=2)
+    assert len(set(paths)) == 2
+    assert len(os.listdir(tmp_path / "samples")) == 2
+    assert sorted(open(p).read().rsplit("\n", 1)[-1] for p in paths) == ["one", "two"]
 
 
 def test_indent_xml_golden():
@@ -201,8 +214,8 @@ def test_purge_and_vacuum(spark, pages, tmp_path):
     assert purged == 1
     n1 = t.read(spark).count()
     assert n1 == n0 - info.n_rows
-    # vacuumed table still reads correctly with fewer snapshots
-    removed = vacuum(spark, t, keep_last=1)
+    # the purged table still reads correctly with fewer snapshots
+    removed = t.expire_snapshots(keep_last=1)
     assert removed > 0
     assert t.read(spark).count() == n1
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from eventanalysis_spark import pipeline
 from eventanalysis_spark.pipeline import Pipeline, PipelineConfig, wide_pass
+from eventanalysis_spark.sources import incremental
 
 
 @pytest.fixture()
@@ -132,12 +133,14 @@ def _lineage_by_sink(p):
     }
 
 
-def test_lineage_and_metrics_sidecars(spark, pages, wh):
+def test_lineage_and_metrics_sidecars(spark, pages, wh, monkeypatch):
     """Each batch writes its per-partition lineage to the 'lineage' table,
     keyed by the batch id its sink commits record, with the table's fixed
     schema and no null timestamps. The metrics sidecar carries throughput
     and stage laps."""
-    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=None, repartition=4))
+    # the whole 3000-row fixture in one capped batch of 4 write tasks
+    monkeypatch.setattr(incremental, "ROWS_PER_TASK", 750)
+    p = _mk(spark, wh, cap=3000)
     r = p.run_batch(pages)
     assert r is not None
     snap = p.wh.table("sink_content").current_snapshot()
@@ -165,12 +168,14 @@ def test_lineage_and_metrics_sidecars(spark, pages, wh):
     }
 
 
-def test_lineage_spills_to_table_above_inline_max(spark, pages, wh):
+def test_lineage_spills_to_table_above_inline_max(spark, pages, wh, monkeypatch):
     """There is no inline lineage threshold any more: whatever the number of
     staged files, the per-partition lineage goes to the 'lineage' table and
     sink commits carry neither an inline list nor a pointer. Totals,
     per-sink counts, the partition grain and resume idempotence all hold."""
-    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=None, repartition=4))
+    # the whole 3000-row fixture in one capped batch of 4 write tasks
+    monkeypatch.setattr(incremental, "ROWS_PER_TASK", 750)
+    p = _mk(spark, wh, cap=3000)
     r = p.run_batch(pages)
     assert r is not None
     snap = p.wh.table("sink_content").current_snapshot()
@@ -181,7 +186,7 @@ def test_lineage_spills_to_table_above_inline_max(spark, pages, wh):
     by_sink = _lineage_by_sink(p)
     for s, n in r.sink_counts.items():
         assert by_sink[s] == n, s
-    # the partition grain survived (all 4 repartition tasks present)
+    # the partition grain survived (all 4 write tasks present)
     assert lin.select("part_id").distinct().count() == 4
     n_lineage_rows = lin.count()
 
@@ -276,11 +281,11 @@ def test_dim_spill_switches_to_table_path(spark, pages, wh, monkeypatch):
     assert _lineage_by_sink(p) == _lineage_by_sink(q)
 
 
-def test_hot_host_salting_learns_and_spreads(spark, pages, wh):
-    """North-rule skew handling: a host above salt_threshold of batch
-    volume is learned from batch N's aggregate and its rows are salted
-    over several partitions in batch N+1, while cold hosts stay
-    co-located in a single partition. The hot set survives resume."""
+def test_capped_batch_tasks_are_uniform(spark, pages, wh, monkeypatch):
+    """No hot host pins a writer on the one batch partitioning: with ~60% of
+    urls moved onto one host, the round-robin shuffle of a capped batch
+    still gives write tasks whose rows (per part_id in the lineage table,
+    summed over sinks) differ by at most one row per scan partition."""
     # rewrite ~60% of urls onto one hot host (urls stay unique via hash)
     hot_src = pages.withColumn(
         "url",
@@ -292,46 +297,28 @@ def test_hot_host_salting_learns_and_spreads(spark, pages, wh):
             ),
         ).otherwise(F.col("url")),
     )
-    cfg = PipelineConfig(
-        warehouse=wh, cap=1500, repartition=4,
-        salt_threshold=0.3, salt_n=8,
-    )
-    pipe = Pipeline(spark, cfg)
-    r1 = pipe.run_batch(hot_src)
-    assert r1 is not None
-    assert "hot.example.com" in pipe._hot_hosts
-
-    r2 = pipe.run_batch(hot_src)
-    assert r2 is not None
-    stg = spark.read.parquet(os.path.join(wh, "_staging", r2.batch_id))
-    hot_parts = (
-        stg.where(F.col("url").contains("hot.example.com"))
-        .select("part_id").distinct().count()
-    )
-    assert hot_parts > 1, "hot host should be salted across partitions"
-    # a cold host stays co-located (salt 0 → one partition)
-    cold_host = (
-        stg.where(~F.col("url").contains("hot.example.com"))
-        .select(F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("h"))
-        .groupBy("h").count().orderBy(F.desc("count")).first()["h"]
-    )
-    cold_parts = (
-        stg.where(F.col("url").contains(cold_host))
-        .select("part_id").distinct().count()
-    )
-    assert cold_parts == 1, f"cold host {cold_host} should stay in one partition"
-    # learned hot set is committed with the watermark and survives resume
-    p2 = Pipeline(spark, cfg)
-    assert p2._hot_hosts == pipe._hot_hosts
+    monkeypatch.setattr(incremental, "ROWS_PER_TASK", 500)
+    p = _mk(spark, wh, cap=2000)
+    r = p.run_batch(hot_src)
+    assert r is not None and r.n_input == 2000
+    per_task = [
+        x["n"] for x in p.wh.table("lineage").read(spark)
+        .groupBy("part_id").agg(F.sum("rows").alias("n")).collect()
+    ]
+    assert len(per_task) == 4 and sum(per_task) == 2000
+    assert max(per_task) - min(per_task) <= hot_src.rdd.getNumPartitions()
 
 
-@pytest.mark.parametrize("repartition, n_tasks", [(None, 1), (4, 4)])
-def test_capped_batch_tasks_sized_by_rows(spark, pages, wh, repartition, n_tasks):
-    """A capped batch below ROWS_PER_TASK rows stages one write task (one
-    part_id, one file per sink dir), however many files the source has;
-    an explicit repartition still sets the task count."""
+@pytest.mark.parametrize("split, n_tasks", [(None, 1), (4, 4)])
+def test_capped_batch_tasks_sized_by_rows(spark, pages, wh, monkeypatch, split, n_tasks):
+    """A capped batch stages ceil(rows / ROWS_PER_TASK) write tasks (that
+    many part_ids, that many files per sink dir), however many files the
+    source has: one below the default ROWS_PER_TASK, `split` with
+    ROWS_PER_TASK at cap / `split`."""
     assert pages.rdd.getNumPartitions() > 1
-    p = Pipeline(spark, PipelineConfig(warehouse=wh, cap=1500, repartition=repartition))
+    if split is not None:
+        monkeypatch.setattr(incremental, "ROWS_PER_TASK", 1500 // split)
+    p = _mk(spark, wh, cap=1500)
     r = p.run_batch(pages)
     stage_dir = os.path.join(wh, "_staging", r.batch_id)
     stg = spark.read.parquet(stage_dir)

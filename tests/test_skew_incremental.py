@@ -1,17 +1,9 @@
-"""Skew handling (salting) and incremental watermark edge cases."""
+"""Incremental watermark edge cases and the task sizing of capped batches."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from eventanalysis_spark.datagen import HOSTS
-from eventanalysis_spark.operators.parse import parse_pages
-from eventanalysis_spark.operators.skew import (
-    hot_keys,
-    salted_agg,
-    salted_repartition,
-)
 from eventanalysis_spark.sources import incremental
 from eventanalysis_spark.sources.incremental import (
     Watermark,
@@ -20,61 +12,6 @@ from eventanalysis_spark.sources.incremental import (
     max_key,
     next_batch,
 )
-
-
-@pytest.fixture(scope="module")
-def parsed(spark, pages):
-    df = parse_pages(pages).persist()
-    df.count()
-    yield df
-    df.unpersist()
-
-
-def test_hot_key_detection(spark, parsed):
-    """The datagen plants two hot hosts at ~22%/16% of rows — both must be
-    detected; cold hosts must not."""
-    hot = hot_keys(parsed, "host", threshold=0.1)
-    # the two planted hot hosts plus at most the heaviest power-law head
-    assert set(HOSTS[:2]) <= set(hot)
-    assert len(hot) <= 4
-    hot_sampled = hot_keys(parsed, "host", threshold=0.1, sample_fraction=0.5)
-    assert set(HOSTS[:2]) <= set(hot_sampled)
-
-
-def test_salted_repartition_spreads_hot_host(spark, parsed):
-    hot = list(HOSTS[:2])
-    out = salted_repartition(parsed, "host", hot, salt_n=8, num_partitions=16)
-    per_part = (
-        out.where(F.col("host") == HOSTS[0])
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
-    )
-    # the hot host spreads over >1 partition (unsalted hash would pin it to 1)
-    assert len(per_part) > 1
-    # row preservation
-    assert out.count() == parsed.count()
-
-
-def test_salted_agg_matches_plain_agg(spark, parsed):
-    hot = list(HOSTS[:2])
-    plain = {
-        (r["host"],): (r["n"], r["b"])
-        for r in parsed.groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_bytes").alias("b"))
-        .collect()
-    }
-    salted = {
-        (r["host"],): (r["n"], r["b"])
-        for r in salted_agg(
-            parsed,
-            ["host"],
-            [("count", "", "n"), ("sum", "n_bytes", "b")],
-            hot,
-            salt_n=8,
-        ).collect()
-    }
-    assert plain == salted
 
 
 def test_watermark_tie_break_on_equal_ts(spark):

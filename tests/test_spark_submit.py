@@ -103,6 +103,31 @@ def test_report_commands_overview_rollup_export_samples(tmp_path):
     assert len(os.listdir(out_s)) == 3
 
 
+def test_report_commands_create_no_warehouse(tmp_path, capsys):
+    """The reading verbs open the warehouse read-only: on a path with no
+    pipeline warehouse they print one JSON error line, return 1 and leave
+    nothing behind."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import spark_submit_main as cli
+
+    base = ["--master", "local[4]"]
+    missing = tmp_path / "missing"
+    assert cli.main(base + ["status", "--warehouse", str(missing)]) == 1
+    assert cli.main(base + [
+        "overview", "--warehouse", str(missing), "--sink", "content",
+    ]) == 1
+    assert not missing.exists()
+    lines = capsys.readouterr().out.splitlines()
+    assert [json.loads(x)["error"] for x in lines] == ["no pipeline warehouse"] * 2
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert cli.main(base + ["status", "--warehouse", str(empty)]) == 1
+    assert os.listdir(empty) == []
+
+
 def test_dedup_index_and_incremental_cli(tmp_path, spark):
     """Cross-crawl dedup CLI: build the index from crawl 1, dedup crawl 2
     against it, survivors written; format-mismatch append is refused."""

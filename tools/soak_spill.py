@@ -2,7 +2,9 @@
 run_until_exhausted drain twice — once with the default driver-side dim
 cache, once with pipeline.DIM_CACHE_LIMIT=0 (host dim forced to the
 warehouse-table path from batch 1) — and report throughput for both plus
-the ratio.
+the ratio. Each arm also reports, per batch, its write tasks and their
+largest and mean rows (from the `lineage` table), so the spread of the
+round-robin batch partitioning is checked at caps that give several tasks.
 
 The spilled path is what a REAL 100 TB run would exercise (10^8 hosts
 don't fit in a driver dict), so "within ~10% of the cached-dim drain" is
@@ -24,6 +26,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BENCH_ROOT = os.environ.get("SPARK_GRAFT_BENCH_ROOT", "/tmp/ea-bench")
 
 
+def task_rows(spark, wh) -> list[dict]:
+    """Per batch: write tasks and their largest and mean rows, summed over
+    sinks from the lineage table."""
+    from pyspark.sql import functions as F
+
+    per_task = (
+        wh.table("lineage").read(spark)
+        .groupBy("batch_id", "part_id").agg(F.sum("rows").alias("n"))
+    )
+    return [
+        {"batch": r["batch_id"], "tasks": r["tasks"], "max": r["max"],
+         "mean": round(r["mean"], 1)}
+        for r in per_task.groupBy("batch_id").agg(
+            F.count(F.lit(1)).alias("tasks"), F.max("n").alias("max"),
+            F.avg("n").alias("mean"),
+        ).orderBy("batch_id").collect()
+    ]
+
+
 def drain(spark, pages: str, docs: int, cap: int, cache_limit: int | None = None) -> dict:
     from eventanalysis_spark import pipeline
     from eventanalysis_spark.pipeline import Pipeline, PipelineConfig
@@ -43,12 +64,14 @@ def drain(spark, pages: str, docs: int, cap: int, cache_limit: int | None = None
         dt = time.perf_counter() - t0
     finally:
         pipeline.DIM_CACHE_LIMIT = default_limit
+    tasks = task_rows(spark, pipe.wh)
     shutil.rmtree(wh, ignore_errors=True)
     return {
         "seconds": round(dt, 2),
         "batches": n_batches,
         "docs": n_docs,
         "docs_per_sec": round(n_docs / dt, 1),
+        "task_rows": tasks,
     }
 
 
